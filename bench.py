@@ -9,7 +9,7 @@ operators at $SPARK_GRAFT_SF_DIR (default sf0.1).
 
 Env knobs:
   SPARK_GRAFT_SF_DIR  parquet table dir (default /root/testdata/sf0.1)
-  SPARK_GRAFT_CPUS    local[N] cores (default 32)
+  SPARK_GRAFT_CPUS    local[N] cores (default: the host's CPU count)
   BENCH_CDC_EVENTS    synthetic binlog size (default 2_000_000)
 
 Run at two parallelism levels for the scaling-efficiency criterion:
@@ -205,7 +205,7 @@ def _bench_overrides() -> dict:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 1))
     n_events = int(os.environ.get("BENCH_CDC_EVENTS", "6000000"))
 
     from nifi_spark.session import get_spark

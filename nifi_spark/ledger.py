@@ -6,11 +6,12 @@ NiFi analogs: StateManager CLUSTER-scope state with compare-and-swap
 (standard/TailFile.java:1219-1247, recovery validation :459-527), and
 AbstractListProcessor's listing.timestamp watermark (:159-161).
 
-One JSON document per stream, written atomically (tmp + os.replace) *after*
-the table snapshot commit. A crash between the two replays the last batch;
-the store's `_last_lsn` LWW merge makes that replay a no-op — end-to-end
-exactly-once, strictly stronger than the reference's at-least-once
-commit-then-state edge (QueryDatabaseTable.java:313-321).
+One JSON document per stream, published durably (`spool.publish`: tmp,
+fsync, rename, directory fsync) *after* the table snapshot commit. A crash
+between the two replays the last batch; the store's `_last_lsn` LWW merge
+makes that replay a no-op — end-to-end exactly-once, strictly stronger
+than the reference's at-least-once commit-then-state edge
+(QueryDatabaseTable.java:313-321).
 
 The checksum is an order-independent aggregate over the applied slice
 (sum of xxhash64(repo,path,lsn) mod 2^61) — computed distributed, no
@@ -24,6 +25,8 @@ import os
 import time
 
 from pyspark.sql import DataFrame, functions as F
+
+from nifi_spark.spool import publish_json
 
 _MOD = (1 << 61) - 1
 
@@ -49,10 +52,7 @@ class OffsetLedger:
         state = {"stream": stream, "last_applied_lsn": int(last_applied_lsn),
                  "batch_id": int(batch_id), "committed_at": time.time(),
                  "checksum": checksum, "table_version": int(table_version)}
-        p = self._path(stream)
-        with open(p + ".tmp", "w") as f:
-            json.dump(state, f)
-        os.replace(p + ".tmp", p)
+        publish_json(self._path(stream), state)
         return state
 
     def clear(self, stream: str) -> None:
@@ -66,7 +66,7 @@ class KVState:
     """Generic atomic JSON key→dict state (the StateManager analog for
     operators whose state isn't an LSN watermark: @Stateful
     UpdateAttribute counters, GetHTTP ETag/Last-Modified, listing
-    timestamps). Same tmp+os.replace commit discipline as OffsetLedger."""
+    timestamps). Same durable publish as OffsetLedger."""
 
     def __init__(self, checkpoint_dir: str):
         self.dir = checkpoint_dir
@@ -83,10 +83,7 @@ class KVState:
             return dict(default or {})
 
     def put(self, key: str, value: dict) -> dict:
-        p = self._path(key)
-        with open(p + ".tmp", "w") as f:
-            json.dump(value, f)
-        os.replace(p + ".tmp", p)
+        publish_json(self._path(key), value)
         return value
 
 

@@ -27,6 +27,20 @@ def _local_dir() -> str:
         return tempfile.gettempdir()
 
 
+def _driver_mem() -> str:
+    """Default driver heap: about 60% of the host's MemTotal, capped at
+    32g (32g when /proc/meminfo is unreadable). The driver JVM is the
+    only executor in local mode and its heap is pinned, so it must fit
+    the host."""
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(line.split()[1]) for line in f
+                      if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return "32g"
+    return f"{min(kb * 6 // 10 // 1024, 32 * 1024)}m"
+
+
 def get_spark(
     app_name: str = "nifi-spark",
     parallelism: int | None = None,
@@ -35,12 +49,15 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession tuned for the engine.
 
-    parallelism: local[N] core count; defaults to $SPARK_GRAFT_CPUS or 32.
+    parallelism: local[N] core count; defaults to $SPARK_GRAFT_CPUS or
+        the host's CPU count.
     shuffle_partitions: defaults to parallelism (small-data local runs);
         on a real cluster this would be sized to ~128 MB per shuffle
         partition at the target data volume.
     """
-    cpus = parallelism or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = parallelism or int(os.environ.get("SPARK_GRAFT_CPUS",
+                                             os.cpu_count() or 1))
+    mem = os.environ.get("SPARK_DRIVER_MEM") or _driver_mem()
     shuf = shuffle_partitions or cpus
     builder = (
         SparkSession.builder.appName(app_name)
@@ -62,13 +79,12 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         # local mode: the driver JVM IS the executor — size its heap for
         # the task-thread count (8g thrashed GC at 16+ threads)
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "32g"))
+        .config("spark.driver.memory", mem)
         # Pin the heap (-Xms = -Xmx): G1's commit/uncommit churn showed up
         # as ~80% kernel time (hundreds of millions of minor page faults)
         # under 32 concurrent shuffle tasks — a fixed heap ends it.
         .config("spark.driver.extraJavaOptions",
-                os.environ.get("SPARK_DRIVER_JAVA_OPTS",
-                               "-Xms" + os.environ.get("SPARK_DRIVER_MEM", "32g")))
+                os.environ.get("SPARK_DRIVER_JAVA_OPTS", "-Xms" + mem))
         # Shuffle files on tmpfs: single-box stand-in for a cluster's
         # distributed shuffle (per-node NVMe + network); keeps the shared
         # virtio disk out of the shuffle path. On a real cluster this is

@@ -50,12 +50,10 @@ in the 0-9-1 surface the RabbitMQ client exposes.
 
 from __future__ import annotations
 
-import os
-import re
 import struct
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from nifi_spark.spool import Spool
 
 FRAME_METHOD, FRAME_HEADER, FRAME_BODY, FRAME_HEARTBEAT = 1, 2, 3, 8
 FRAME_END = 0xCE
@@ -891,26 +889,20 @@ _SPOOL_SCHEMA = ("batch_id bigint, msg_idx bigint, queue string, "
                  "headers string, payload binary")
 
 
-class ConsumeAMQPSource:
+class ConsumeAMQPSource(Spool):
     """Drain-to-spool bridge: basic_get until get-empty → one spool
     file per drain, with the reference's ``amqp$*`` attribute surface
     flattened to columns (AMQPUtils.PropertyNames; contentType doubles
     as mime.type there, here the content_type column)."""
 
-    _MAX_PER_BATCH = 1_000_000
+    schema = _SPOOL_SCHEMA
 
     def __init__(self, spool_dir: str):
-        self.spool_dir = spool_dir
-        os.makedirs(spool_dir, exist_ok=True)
-        pat = re.compile(r"batch_(\d{8})\.parquet$")
-        ids = [int(m.group(1)) for f in os.listdir(spool_dir)
-               if (m := pat.match(f))]
-        self._next_batch = max(ids) + 1 if ids else 0
+        super().__init__(spool_dir)
 
     def drain(self, client: AmqpClient, queue: str, *,
               no_ack: bool = True, max_messages: int = 1_000_000) -> int:
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
         msgs = []
         while len(msgs) < max_messages:
@@ -918,18 +910,13 @@ class ConsumeAMQPSource:
             if got is None:
                 break
             msgs.append(got)
-        if not msgs:
-            return 0
-        bid = self._next_batch
 
         def prop(name, cast=None):
             vals = [m[0].get(name) for m in msgs]
             return [cast(v) if cast and v is not None else v
                     for v in vals]
 
-        table = pa.table({
-            "batch_id": pa.array([bid] * len(msgs), pa.int64()),
-            "msg_idx": pa.array(range(len(msgs)), pa.int64()),
+        return self.land({
             "queue": pa.array([queue] * len(msgs), pa.string()),
             "exchange": pa.array([m[2] for m in msgs], pa.string()),
             "routing_key": pa.array([m[3] for m in msgs], pa.string()),
@@ -948,18 +935,6 @@ class ConsumeAMQPSource:
                 pa.string()),
             "payload": pa.array([m[1] for m in msgs], pa.binary()),
         })
-        final = os.path.join(self.spool_dir, f"batch_{bid:08d}.parquet")
-        tmp = final + ".tmp"
-        pq.write_table(table, tmp)
-        os.rename(tmp, final)
-        self._next_batch = bid + 1
-        return len(msgs)
-
-    def read(self, spark: SparkSession) -> DataFrame:
-        df = spark.read.schema(_SPOOL_SCHEMA).parquet(self.spool_dir)
-        return df.withColumn(
-            "msg_seq",
-            F.col("batch_id") * self._MAX_PER_BATCH + F.col("msg_idx"))
 
 
 def publish_amqp(rows, client: AmqpClient, *, exchange: str,

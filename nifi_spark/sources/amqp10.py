@@ -43,11 +43,10 @@ back on a socketpair; production wraps a TLS socket.
 
 from __future__ import annotations
 
-import os
 import re
 import struct
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from nifi_spark.spool import Spool
 
 
 class Amqp10Error(IOError):
@@ -774,6 +773,7 @@ class EventHubReceiver:
         self._next_handle = 0
         self._links: dict[int, int] = {}      # pid -> receiver handle
         self._send_links: dict = {}           # pid|None -> sender handle
+        self._txn_handle: "int | None" = None  # coordinator link
         self._delivery = 0
         # SASL layer
         self._write(SASL_HDR)
@@ -1027,8 +1027,9 @@ class EventHubReceiver:
     def declare_txn(self) -> bytes:
         """§4.4.2: declare on the coordinator link → txn-id from the
         declared disposition state."""
-        handle = getattr(self, "_txn_handle", None) \
-            or self._attach_coordinator()
+        handle = self._txn_handle
+        if handle is None:         # handle 0 is a live link, not "none"
+            handle = self._attach_coordinator()
         self._delivery += 1
         did = self._delivery
         msg = encode_message(
@@ -1048,7 +1049,7 @@ class EventHubReceiver:
                       fail: bool = False) -> None:
         """§4.4.3: discharge — fail=False commits the staged
         transfers, fail=True rolls them back."""
-        handle = getattr(self, "_txn_handle", None)
+        handle = self._txn_handle
         if handle is None:
             raise Amqp10Error("no coordinator link (declare first)")
         self._delivery += 1
@@ -1122,27 +1123,19 @@ def eventhub_loopback(broker: EventHubBroker):
 # -------------------------------------------------------- spool bridge
 
 
-class GetEventHubSource:
+class GetEventHubSource(Spool):
     """GetAzureEventHub drain loop → parquet spool with the
     reference's exact attribute surface (GetAzureEventHub.java:63-67):
     eventhub.enqueued.timestamp / offset / sequence / name /
     partition. One receive(batch) per partition per pass, loops until
     every partition returns an empty batch."""
 
-    _MAX_PER_BATCH = 1_000_000
-
     def __init__(self, spool_dir: str):
-        self.spool_dir = spool_dir
-        os.makedirs(spool_dir, exist_ok=True)
-        pat = re.compile(r"batch_(\d{8})\.parquet$")
-        ids = [int(m.group(1)) for f in os.listdir(spool_dir)
-               if (m := pat.match(f))]
-        self._next_batch = max(ids) + 1 if ids else 0
+        super().__init__(spool_dir, "msg_seq", "msg_seq")
 
     def drain(self, receiver: EventHubReceiver,
               partitions: list[int], *, batch_size: int = 100) -> int:
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
         landed = 0
         active = list(partitions)
@@ -1153,10 +1146,7 @@ class GetEventHubSource:
                 if not msgs:
                     continue
                 still.append(pid)
-                bid = self._next_batch
-                table = pa.table({
-                    "batch_id": pa.array([bid] * len(msgs), pa.int64()),
-                    "msg_seq": pa.array(range(len(msgs)), pa.int64()),
+                landed += self.land({
                     "eventhub_name": pa.array(
                         [receiver.hub] * len(msgs), pa.string()),
                     "eventhub_partition": pa.array(
@@ -1176,18 +1166,5 @@ class GetEventHubSource:
                          for m in msgs],
                         pa.map_(pa.string(), pa.string())),
                 })
-                final = os.path.join(self.spool_dir,
-                                     f"batch_{bid:08d}.parquet")
-                tmp = final + ".tmp"
-                pq.write_table(table, tmp)
-                os.rename(tmp, final)
-                self._next_batch = bid + 1
-                landed += len(msgs)
             active = still
         return landed
-
-    def read(self, spark: SparkSession) -> DataFrame:
-        return (spark.read.parquet(self.spool_dir)
-                .withColumn("msg_seq",
-                            F.col("batch_id") * self._MAX_PER_BATCH
-                            + F.col("msg_seq")))

@@ -38,11 +38,10 @@ from __future__ import annotations
 
 import hashlib
 import json
-import os
 import re
 import struct
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from nifi_spark.spool import Spool
 
 
 class CqlError(IOError):
@@ -864,51 +863,26 @@ def cql_loopback(server: CqlServer):
     return a.recv, a.sendall, join
 
 
-class QueryCassandraSource:
+class QueryCassandraSource(Spool):
     """QueryCassandra → parquet spool: one row per result row, values
     carried as a JSON object keyed by column name (the reference's
     convertToJsonStream row shape), with the typed column list kept
     alongside."""
 
-    _MAX_PER_BATCH = 1_000_000
-
     def __init__(self, spool_dir: str):
-        self.spool_dir = spool_dir
-        os.makedirs(spool_dir, exist_ok=True)
-        pat = re.compile(r"batch_(\d{8})\.parquet$")
-        ids = [int(m.group(1)) for f in os.listdir(spool_dir)
-               if (m := pat.match(f))]
-        self._next_batch = max(ids) + 1 if ids else 0
+        super().__init__(spool_dir, "row_seq", "row_seq")
 
     def drain(self, client: CqlClient, cql: str, *,
               page_size: int = 0) -> int:
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
         cols, rows = client.query(cql, page_size=page_size)
-        if not rows:
-            return 0
-        bid = self._next_batch
         names = [n for n, _t in cols]
         payloads = [json.dumps(dict(zip(names, r)), sort_keys=True,
                                separators=(",", ":")) for r in rows]
-        table = pa.table({
-            "batch_id": pa.array([bid] * len(rows), pa.int64()),
-            "row_seq": pa.array(range(len(rows)), pa.int64()),
+        return self.land({
             "cql": pa.array([cql] * len(rows), pa.string()),
             "columns": pa.array([json.dumps(cols)] * len(rows),
                                 pa.string()),
             "payload": pa.array(payloads, pa.string()),
         })
-        final = os.path.join(self.spool_dir, f"batch_{bid:08d}.parquet")
-        tmp = final + ".tmp"
-        pq.write_table(table, tmp)
-        os.rename(tmp, final)
-        self._next_batch = bid + 1
-        return len(rows)
-
-    def read(self, spark: SparkSession) -> DataFrame:
-        return (spark.read.parquet(self.spool_dir)
-                .withColumn("row_seq",
-                            F.col("batch_id") * self._MAX_PER_BATCH
-                            + F.col("row_seq")))

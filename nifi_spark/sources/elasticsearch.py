@@ -33,13 +33,11 @@ response_bytes)``; tests wire it to `EsServer.handle`.
 from __future__ import annotations
 
 import json
-import os
 import re
 import urllib.parse
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
-
 from ..ledger import KVState
+from ..spool import Spool
 
 
 class EsError(IOError):
@@ -288,25 +286,14 @@ class EsClient:
 # -------------------------------------------------------- spool bridges
 
 
-class _SpoolBase:
-    _MAX_PER_BATCH = 1_000_000
-
+class _SpoolBase(Spool):
     def __init__(self, spool_dir: str):
-        self.spool_dir = spool_dir
-        os.makedirs(spool_dir, exist_ok=True)
-        pat = re.compile(r"batch_(\d{8})\.parquet$")
-        ids = [int(m.group(1)) for f in os.listdir(spool_dir)
-               if (m := pat.match(f))]
-        self._next_batch = max(ids) + 1 if ids else 0
+        super().__init__(spool_dir, "hit_seq", "hit_seq")
 
     def _write(self, rows: list[dict]) -> None:
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
-        bid = self._next_batch
-        table = pa.table({
-            "batch_id": pa.array([bid] * len(rows), pa.int64()),
-            "hit_seq": pa.array(range(len(rows)), pa.int64()),
+        self.land({
             "es_index": pa.array([r["_index"] for r in rows],
                                  pa.string()),
             "es_type": pa.array([r["_type"] for r in rows],
@@ -317,18 +304,6 @@ class _SpoolBase:
                             separators=(",", ":")) for r in rows],
                 pa.string()),
         })
-        final = os.path.join(self.spool_dir,
-                             f"batch_{bid:08d}.parquet")
-        tmp = final + ".tmp"
-        pq.write_table(table, tmp)
-        os.rename(tmp, final)
-        self._next_batch = bid + 1
-
-    def read(self, spark: SparkSession) -> DataFrame:
-        return (spark.read.parquet(self.spool_dir)
-                .withColumn("hit_seq",
-                            F.col("batch_id") * self._MAX_PER_BATCH
-                            + F.col("hit_seq")))
 
 
 class QueryEsSource(_SpoolBase):

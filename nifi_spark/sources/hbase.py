@@ -32,13 +32,10 @@ bridge every listen/get source here uses."""
 from __future__ import annotations
 
 import json
-import os
-import re
 import struct
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
-
 from ..ledger import KVState
+from ..spool import Spool
 
 
 class HBaseError(IOError):
@@ -108,7 +105,7 @@ def serialize_row_json(row_key: str,
             + ", ".join(parts) + "}}")
 
 
-class GetHBaseSource:
+class GetHBaseSource(Spool):
     """GetHBase's onTrigger over an injectable HBaseTable, landing one
     spool file per drain. State = {timestamp, matching_cells
     {row → [values]}, table} in KVState (the reference's ScanResult
@@ -119,16 +116,11 @@ class GetHBaseSource:
                  initial_time_range: str = "None",
                  key: str = "get_hbase"):
         assert initial_time_range in ("None", "Current Time")
-        self.spool_dir = spool_dir
+        super().__init__(spool_dir, "row_seq", "event_seq")
         self.state = state
         self.key = key
         self.columns = columns
         self.initial_time_range = initial_time_range
-        os.makedirs(spool_dir, exist_ok=True)
-        pat = re.compile(r"batch_(\d{8})\.parquet$")
-        ids = [int(m.group(1)) for f in os.listdir(spool_dir)
-               if (m := pat.match(f))]
-        self._next_batch = max(ids) + 1 if ids else 0
 
     def drain(self, table: HBaseTable, *, now_ms: int = 0) -> int:
         st = self.state.get(self.key)
@@ -171,30 +163,12 @@ class GetHBaseSource:
 
     def _land(self, rows: "list[tuple[str, str]]",
               table_name: str) -> int:
-        if not rows:
-            return 0
         import pyarrow as pa
-        import pyarrow.parquet as pq
-        bid = self._next_batch
-        t = pa.table({
-            "batch_id": pa.array([bid] * len(rows), pa.int64()),
-            "row_seq": pa.array(range(len(rows)), pa.int64()),
+        return self.land({
             "hbase_table": pa.array([table_name] * len(rows)),
             "mime_type": pa.array(["application/json"] * len(rows)),
             "payload": pa.array([p for _rk, p in rows], pa.string()),
         })
-        final = os.path.join(self.spool_dir, f"batch_{bid:08d}.parquet")
-        tmp = final + ".tmp"
-        pq.write_table(t, tmp)
-        os.rename(tmp, final)
-        self._next_batch = bid + 1
-        return len(rows)
-
-    def read(self, spark: SparkSession) -> DataFrame:
-        return (spark.read.parquet(self.spool_dir)
-                .withColumn("event_seq",
-                            F.col("batch_id") * 1_000_000
-                            + F.col("row_seq")))
 
 
 # ------------------------------------------------------------- puts

@@ -33,7 +33,7 @@ import json
 import os
 import re
 
-from pyspark.sql import DataFrame, SparkSession
+from nifi_spark.spool import Spool, publish_json
 
 EVENT_TYPES = ("append", "close", "create", "metadata", "rename",
                "unlink")
@@ -114,9 +114,11 @@ def _event_path(ev: dict) -> str:
     return ev.get("path", "")
 
 
-class GetHDFSEventsSource:
+class GetHDFSEventsSource(Spool):
     """Poll loop → parquet spool with the reference's filter +
     watermark semantics."""
+
+    schema = _SPOOL_SCHEMA
 
     def __init__(self, feed, spool_dir: str, *,
                  path_watch_regex: str = ".*",
@@ -132,19 +134,14 @@ class GetHDFSEventsSource:
             # EventTypeValidator.java's message shape
             raise ValueError(f"The following are not valid event "
                              f"types: {bad}")
+        super().__init__(spool_dir, None, None)
         self.feed = feed
-        self.spool_dir = spool_dir
         self.watch = re.compile(path_watch_regex)
         self.ignore_hidden = ignore_hidden
         self.wanted = frozenset(wanted)
         self.poll_retries = poll_retries
-        os.makedirs(spool_dir, exist_ok=True)
         self.state_path = state_path or os.path.join(
             spool_dir, "_inotify_state.json")
-        pat = re.compile(r"batch_(\d{8})\.parquet$")
-        ids = [int(m.group(1)) for f in os.listdir(spool_dir)
-               if (m := pat.match(f))]
-        self._next_batch = max(ids) + 1 if ids else 0
         try:
             with open(self.state_path) as f:
                 self.last_txid = int(json.load(f)["last.tx.id"])
@@ -152,10 +149,7 @@ class GetHDFSEventsSource:
             self.last_txid = -1
 
     def _persist(self) -> None:
-        tmp = self.state_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"last.tx.id": self.last_txid}, f)
-        os.replace(tmp, self.state_path)
+        publish_json(self.state_path, {"last.tx.id": self.last_txid})
 
     def _accept(self, ev: dict) -> bool:
         """toProcessEvent + NotificationEventPathFilter: type in the
@@ -176,6 +170,8 @@ class GetHDFSEventsSource:
         caller yields); MissingEventsError resets the watermark to -1
         — the next poll re-opens at the earliest retained edit, purged
         events are lost (the reference's documented behavior)."""
+        import pyarrow as pa
+
         attempt = 0
         while True:
             attempt += 1
@@ -193,32 +189,22 @@ class GetHDFSEventsSource:
             self._persist()
             return 0
         kept = [ev for ev in batch.events if self._accept(ev)]
-        if kept:
-            import pyarrow as pa
-            import pyarrow.parquet as pq
-            bid = self._next_batch
-            table = pa.table({
-                "txid": pa.array([int(e["_txid"]) for e in kept],
-                                 pa.int64()),
-                "event_type": pa.array([e["eventType"] for e in kept],
-                                       pa.string()),
-                "event_path": pa.array([_event_path(e) for e in kept],
-                                       pa.string()),
-                "event_json": pa.array(
-                    [json.dumps({k: v for k, v in e.items()
-                                 if k != "_txid"}, sort_keys=True)
-                     for e in kept], pa.string()),
-                "mime_type": pa.array(["application/json"] * len(kept),
-                                      pa.string()),
-            })
-            final = os.path.join(self.spool_dir,
-                                 f"batch_{bid:08d}.parquet")
-            tmp = final + ".tmp"
-            pq.write_table(table, tmp)
-            os.rename(tmp, final)
-            self._next_batch = bid + 1
+        self.land({
+            "txid": pa.array([int(e["_txid"]) for e in kept],
+                             pa.int64()),
+            "event_type": pa.array([e["eventType"] for e in kept],
+                                   pa.string()),
+            "event_path": pa.array([_event_path(e) for e in kept],
+                                   pa.string()),
+            "event_json": pa.array(
+                [json.dumps({k: v for k, v in e.items()
+                             if k != "_txid"}, sort_keys=True)
+                 for e in kept], pa.string()),
+            "mime_type": pa.array(["application/json"] * len(kept),
+                                  pa.string()),
+        })
         self.last_txid = batch.txid
-        self._persist()            # after the spool rename: at-least-once
+        self._persist()            # after the spool publish: at-least-once
         return len(kept)
 
     def drain(self, max_events: int = 100) -> int:
@@ -229,15 +215,3 @@ class GetHDFSEventsSource:
             total += self.poll(max_events)
             if self.last_txid == before:
                 return total
-
-    def read(self, spark: SparkSession) -> DataFrame:
-        return spark.read.schema(_SPOOL_SCHEMA).parquet(self.spool_dir)
-
-    def read_stream(self, spark: SparkSession,
-                    max_files_per_trigger: "int | None" = None
-                    ) -> DataFrame:
-        reader = spark.readStream.schema(_SPOOL_SCHEMA)
-        if max_files_per_trigger is not None:
-            reader = reader.option("maxFilesPerTrigger",
-                                   max_files_per_trigger)
-        return reader.parquet(self.spool_dir)

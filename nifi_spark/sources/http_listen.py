@@ -21,11 +21,10 @@ servlet's unpackager split, but as a distributed scan.
 
 from __future__ import annotations
 
-import os
 import re
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from nifi_spark.spool import Spool
 
 _SPOOL_SCHEMA = ("batch_id bigint, msg_idx bigint, method string, "
                  "uri string, query_string string, "
@@ -286,33 +285,22 @@ def requests_feed(data: bytes):
     return read
 
 
-class ListenHTTPSource:
+class ListenHTTPSource(Spool):
     """Drain-to-spool bridge (listen.py pattern): one served connection
     → one spool file of accepted POSTs."""
 
-    _MAX_PER_BATCH = 1_000_000
+    schema = _SPOOL_SCHEMA
 
     def __init__(self, spool_dir: str, *,
                  max_body: int = 64 * 1024 * 1024):
-        self.spool_dir = spool_dir
+        super().__init__(spool_dir)
         self.max_body = max_body
-        os.makedirs(spool_dir, exist_ok=True)
-        pat = re.compile(r"batch_(\d{8})\.parquet$")
-        ids = [int(m.group(1)) for f in os.listdir(spool_dir)
-               if (m := pat.match(f))]
-        self._next_batch = max(ids) + 1 if ids else 0
 
     def drain_connection(self, read, write) -> int:
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
         reqs = serve_http(read, write, max_body=self.max_body)
-        if not reqs:
-            return 0
-        bid = self._next_batch
-        table = pa.table({
-            "batch_id": pa.array([bid] * len(reqs), pa.int64()),
-            "msg_idx": pa.array(range(len(reqs)), pa.int64()),
+        return self.land({
             "method": pa.array([q.method for q in reqs], pa.string()),
             "uri": pa.array([q.uri for q in reqs], pa.string()),
             "query_string": pa.array([q.query_string for q in reqs],
@@ -323,15 +311,3 @@ class ListenHTTPSource:
                                      pa.string()),
             "body": pa.array([q.body for q in reqs], pa.binary()),
         })
-        final = os.path.join(self.spool_dir, f"batch_{bid:08d}.parquet")
-        tmp = final + ".tmp"
-        pq.write_table(table, tmp)
-        os.rename(tmp, final)
-        self._next_batch = bid + 1
-        return len(reqs)
-
-    def read(self, spark: SparkSession) -> DataFrame:
-        df = spark.read.schema(_SPOOL_SCHEMA).parquet(self.spool_dir)
-        return df.withColumn(
-            "msg_seq",
-            F.col("batch_id") * self._MAX_PER_BATCH + F.col("msg_idx"))

@@ -39,10 +39,11 @@ socketpair thread.
 
 from __future__ import annotations
 
-import os
 import re
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from nifi_spark.spool import Spool
 
 _SPOOL_SCHEMA = ("batch_id bigint, msg_idx bigint, folder string, "
                  "content string")
@@ -652,49 +653,29 @@ def imap_loopback(*, user: str, password: str,
     return connect, join
 
 
-class ConsumeIMAPSource:
+class ConsumeIMAPSource(Spool):
     """Drain-to-spool bridge (pop3.py pattern, folder-addressed)."""
 
-    _MAX_PER_BATCH = 1_000_000
+    schema = _SPOOL_SCHEMA
 
     def __init__(self, spool_dir: str):
-        self.spool_dir = spool_dir
-        os.makedirs(spool_dir, exist_ok=True)
-        pat = re.compile(r"batch_(\d{8})\.parquet$")
-        ids = [int(m.group(1)) for f in os.listdir(spool_dir)
-               if (m := pat.match(f))]
-        self._next_batch = max(ids) + 1 if ids else 0
+        super().__init__(spool_dir)
 
     def drain(self, connect, *, user: str, password: str,
               folder: str = "INBOX", delete: bool = True,
               use_uid: bool = False) -> int:
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
         read_line, write = connect()
         msgs = imap_fetch(read_line, write, user=user,
                           password=password, folder=folder,
                           delete=delete, use_uid=use_uid)
-        if not msgs:
-            return 0
-        bid = self._next_batch
-        table = pa.table({
-            "batch_id": pa.array([bid] * len(msgs), pa.int64()),
-            "msg_idx": pa.array(range(len(msgs)), pa.int64()),
+        return self.land({
             "folder": pa.array([folder] * len(msgs), pa.string()),
             "content": pa.array([m.decode("utf-8", errors="replace")
                                  for m in msgs], pa.string()),
         })
-        final = os.path.join(self.spool_dir, f"batch_{bid:08d}.parquet")
-        tmp = final + ".tmp"
-        pq.write_table(table, tmp)
-        os.rename(tmp, final)
-        self._next_batch = bid + 1
-        return len(msgs)
 
     def read(self, spark: SparkSession) -> DataFrame:
-        df = spark.read.schema(_SPOOL_SCHEMA).parquet(self.spool_dir)
-        return (df.withColumn("msg_seq",
-                              F.col("batch_id") * self._MAX_PER_BATCH
-                              + F.col("msg_idx"))
-                .withColumn("mime_type", F.lit("message/rfc822")))
+        return super().read(spark).withColumn(
+            "mime_type", F.lit("message/rfc822"))

@@ -36,11 +36,12 @@ from __future__ import annotations
 import gzip
 import json
 import os
-import re
 import struct
 import zlib
 
 from pyspark.sql import DataFrame, SparkSession
+
+from nifi_spark.spool import Spool, publish_json
 
 API_PRODUCE, API_FETCH, API_METADATA = 0, 1, 3
 ERR_NONE, ERR_OFFSET_OUT_OF_RANGE, ERR_UNKNOWN_TOPIC = 0, 1, 3
@@ -552,7 +553,7 @@ def kafka_loopback(broker: KafkaBroker):
 # ----------------------------------------------------------- bridge
 
 
-class ConsumeKafkaWireSource:
+class ConsumeKafkaWireSource(Spool):
     """Drain-to-spool bridge with ledgered offsets: metadata → fetch
     every partition from its committed next-offset to the
     highwatermark → one atomic spool file → commit offsets to a state
@@ -561,15 +562,8 @@ class ConsumeKafkaWireSource:
     (topic, partition, kafka_offset) if it needs exactly-once. Columns
     mirror GetKafka's attribute surface (GetKafka.java:75-79)."""
 
-    _MAX_PER_BATCH = 1_000_000
-
     def __init__(self, spool_dir: str):
-        self.spool_dir = spool_dir
-        os.makedirs(spool_dir, exist_ok=True)
-        pat = re.compile(r"batch_(\d{8})\.parquet$")
-        ids = [int(m.group(1)) for f in os.listdir(spool_dir)
-               if (m := pat.match(f))]
-        self._next_batch = max(ids) + 1 if ids else 0
+        super().__init__(spool_dir, None, None)
         self._state_path = os.path.join(spool_dir, "offsets.json")
 
     def _offsets(self) -> "dict[str, int]":
@@ -581,7 +575,6 @@ class ConsumeKafkaWireSource:
     def drain(self, client: KafkaWireClient, topic: str, *,
               max_bytes: int = 1 << 20) -> int:
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
         parts = client.metadata([topic]).get(topic)
         if parts is None:
@@ -603,9 +596,7 @@ class ConsumeKafkaWireSource:
             new_state[f"{topic}/{p}"] = off
         if not rows:
             return 0
-        bid = self._next_batch
-        table = pa.table({
-            "batch_id": pa.array([bid] * len(rows), pa.int64()),
+        self.land({
             "kafka_topic": pa.array([topic] * len(rows), pa.string()),
             "kafka_partition": pa.array([r[0] for r in rows],
                                         pa.int32()),
@@ -613,15 +604,7 @@ class ConsumeKafkaWireSource:
             "kafka_key": pa.array([r[2] for r in rows], pa.binary()),
             "payload": pa.array([r[3] for r in rows], pa.binary()),
         })
-        final = os.path.join(self.spool_dir, f"batch_{bid:08d}.parquet")
-        tmp = final + ".tmp"
-        pq.write_table(table, tmp)
-        os.rename(tmp, final)
-        self._next_batch = bid + 1
-        tmp_state = self._state_path + ".tmp"
-        with open(tmp_state, "w") as f:
-            json.dump(new_state, f)
-        os.rename(tmp_state, self._state_path)
+        publish_json(self._state_path, new_state)
         return len(rows)
 
     def read(self, spark: SparkSession) -> DataFrame:

@@ -34,11 +34,11 @@ listing at construction, so restarts never reuse a file name.
 
 from __future__ import annotations
 
-import os
-import re
 from collections.abc import Callable, Iterator
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
+
+from nifi_spark.spool import Spool
 
 # recv() -> (sender, payload_bytes) for one datagram / socket read, or
 # None when the queue is empty (the poll-timeout analog).
@@ -47,10 +47,8 @@ Recv = Callable[[], "tuple[str, bytes] | None"]
 _SPOOL_SCHEMA = ("batch_id bigint, msg_idx bigint, sender string, "
                  "protocol string, port int, raw string")
 
-_MAX_PER_BATCH = 1_000_000  # msg_seq packing bound, enforced loudly
 
-
-class ListenSource:
+class ListenSource(Spool):
     """Base drain-to-spool bridge. `framing`:
 
     * ``'datagram'`` — one ``recv()`` payload is one message (ListenUDP,
@@ -61,24 +59,20 @@ class ListenSource:
       framing: a message is only emitted once its demarcator arrives).
     """
 
+    schema = _SPOOL_SCHEMA
+
     def __init__(self, spool_dir: str, *, protocol: str = "UDP",
                  port: int = 514, framing: str = "datagram",
                  demarcator: bytes = b"\n", charset: str = "utf-8"):
         if framing not in ("datagram", "demarcated"):
             raise ValueError(f"unknown framing {framing!r}")
-        self.spool_dir = spool_dir
+        super().__init__(spool_dir)
         self.protocol = protocol
         self.port = port
         self.framing = framing
         self.demarcator = demarcator
         self.charset = charset
         self._carry: dict[str, bytes] = {}   # per-sender TCP tail
-        os.makedirs(spool_dir, exist_ok=True)
-        # crash-safe monotonic batch ids: recover from the spool listing
-        pat = re.compile(r"batch_(\d{8})\.parquet$")
-        ids = [int(m.group(1)) for f in os.listdir(spool_dir)
-               if (m := pat.match(f))]
-        self._next_batch = max(ids) + 1 if ids else 0
 
     # ------------------------------------------------------------ drain
 
@@ -110,30 +104,15 @@ class ListenSource:
         of messages landed (0 = nothing written, like the reference's
         early return on an empty queue)."""
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
         rows = list(self._messages(recv, max_batch_size))
-        if not rows:
-            return 0
-        if len(rows) > _MAX_PER_BATCH:
-            raise ValueError(f"drain batch {len(rows)} exceeds msg_seq "
-                             f"packing bound {_MAX_PER_BATCH}")
-        bid = self._next_batch
-        table = pa.table({
-            "batch_id": pa.array([bid] * len(rows), pa.int64()),
-            "msg_idx": pa.array(range(len(rows)), pa.int64()),
+        return self.land({
             "sender": pa.array([s for s, _ in rows], pa.string()),
             "protocol": pa.array([self.protocol] * len(rows), pa.string()),
             "port": pa.array([self.port] * len(rows), pa.int32()),
             "raw": pa.array([p.decode(self.charset, errors="replace")
                              for _, p in rows], pa.string()),
         })
-        final = os.path.join(self.spool_dir, f"batch_{bid:08d}.parquet")
-        tmp = final + ".tmp"
-        pq.write_table(table, tmp)
-        os.rename(tmp, final)  # visibility = atomic rename
-        self._next_batch = bid + 1
-        return len(rows)
 
     def drain_all(self, recv: Recv, max_batch_size: int = 1000) -> int:
         """Drain until the feed reports empty. One spool file per
@@ -142,34 +121,6 @@ class ListenSource:
         while (n := self.drain(recv, max_batch_size)):
             total += n
         return total
-
-    # ------------------------------------------------------------- read
-
-    def read(self, spark: SparkSession) -> DataFrame:
-        """The landed table: batch_id, msg_idx, sender, protocol, port,
-        raw (+ msg_seq, a global arrival order usable as an enforce-order
-        / watermark key downstream)."""
-        df = spark.read.schema(_SPOOL_SCHEMA).parquet(self.spool_dir)
-        return df.withColumn(
-            "msg_seq",
-            F.col("batch_id") * _MAX_PER_BATCH + F.col("msg_idx"))
-
-    def read_stream(self, spark: SparkSession,
-                    max_files_per_trigger: "int | None" = None
-                    ) -> DataFrame:
-        """Continuous consumption: the spool is a Structured Streaming
-        file source (spool files are immutable + atomically renamed, the
-        exact contract the file source requires). Each drain() lands one
-        file → one unit of trigger progress; checkpointing the stream
-        replaces the batch watermark pattern."""
-        reader = spark.readStream.schema(_SPOOL_SCHEMA)
-        if max_files_per_trigger is not None:
-            reader = reader.option("maxFilesPerTrigger",
-                                   max_files_per_trigger)
-        df = reader.parquet(self.spool_dir)
-        return df.withColumn(
-            "msg_seq",
-            F.col("batch_id") * _MAX_PER_BATCH + F.col("msg_idx"))
 
 
 class ListenUDPSource(ListenSource):

@@ -15,13 +15,11 @@ BEFORE the final ack is written.
 
 from __future__ import annotations
 
-import os
-import re
 import struct
 import zlib
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from nifi_spark.spool import Spool
 
 _SPOOL_SCHEMA = ("batch_id bigint, msg_idx bigint, seq bigint, "
                  "line string, fields map<string,string>")
@@ -175,46 +173,23 @@ def serve_lumberjack(read, write) -> list[LumberjackEvent]:
             raise LumberjackError(f"unknown frame type {ftype!r}")
 
 
-class ListenLumberjackSource:
+class ListenLumberjackSource(Spool):
     """Drain-to-spool bridge (listen.py pattern); seq kept for the
     protocol's own ordering/dedup, `line` = event body, `fields` = the
     remaining keys (the reference's lumberjack.fields attribute)."""
 
-    _MAX_PER_BATCH = 1_000_000
+    schema = _SPOOL_SCHEMA
 
     def __init__(self, spool_dir: str):
-        self.spool_dir = spool_dir
-        os.makedirs(spool_dir, exist_ok=True)
-        pat = re.compile(r"batch_(\d{8})\.parquet$")
-        ids = [int(m.group(1)) for f in os.listdir(spool_dir)
-               if (m := pat.match(f))]
-        self._next_batch = max(ids) + 1 if ids else 0
+        super().__init__(spool_dir)
 
     def drain_connection(self, read, write) -> int:
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
         events = serve_lumberjack(read, write)
-        if not events:
-            return 0
-        bid = self._next_batch
-        table = pa.table({
-            "batch_id": pa.array([bid] * len(events), pa.int64()),
-            "msg_idx": pa.array(range(len(events)), pa.int64()),
+        return self.land({
             "seq": pa.array([e.seq for e in events], pa.int64()),
             "line": pa.array([e.line for e in events], pa.string()),
             "fields": pa.array([list(e.fields.items()) for e in events],
                                pa.map_(pa.string(), pa.string())),
         })
-        final = os.path.join(self.spool_dir, f"batch_{bid:08d}.parquet")
-        tmp = final + ".tmp"
-        pq.write_table(table, tmp)
-        os.rename(tmp, final)
-        self._next_batch = bid + 1
-        return len(events)
-
-    def read(self, spark: SparkSession) -> DataFrame:
-        df = spark.read.schema(_SPOOL_SCHEMA).parquet(self.spool_dir)
-        return df.withColumn(
-            "msg_seq",
-            F.col("batch_id") * self._MAX_PER_BATCH + F.col("msg_idx"))

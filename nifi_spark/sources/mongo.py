@@ -29,11 +29,9 @@ production wraps a TCP socket).
 from __future__ import annotations
 
 import json
-import os
-import re
 import struct
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from nifi_spark.spool import Spool
 
 
 class MongoError(IOError):
@@ -471,51 +469,26 @@ def _doc_json(doc: dict) -> str:
     return json.dumps(conv(doc), separators=(",", ":"), sort_keys=True)
 
 
-class GetMongoSource:
+class GetMongoSource(Spool):
     """GetMongo → parquet spool: one row per result document, the
     reference's attribute surface (`mongo.database`,
     `mongo.collection`), document body as its JSON serialization."""
 
-    _MAX_PER_BATCH = 1_000_000
-
     def __init__(self, spool_dir: str):
-        self.spool_dir = spool_dir
-        os.makedirs(spool_dir, exist_ok=True)
-        pat = re.compile(r"batch_(\d{8})\.parquet$")
-        ids = [int(m.group(1)) for f in os.listdir(spool_dir)
-               if (m := pat.match(f))]
-        self._next_batch = max(ids) + 1 if ids else 0
+        super().__init__(spool_dir, "doc_seq", "doc_seq")
 
     def drain(self, client: MongoClient, collection: str,
               query: dict | None = None, *, sort: dict | None = None,
               limit: int = 0, projection: dict | None = None,
               batch_size: int = 0) -> int:
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
         docs = client.find(collection, query, sort=sort, limit=limit,
                            projection=projection, batch_size=batch_size)
-        if not docs:
-            return 0
-        bid = self._next_batch
-        table = pa.table({
-            "batch_id": pa.array([bid] * len(docs), pa.int64()),
-            "doc_seq": pa.array(range(len(docs)), pa.int64()),
+        return self.land({
             "database": pa.array([client.db] * len(docs), pa.string()),
             "collection": pa.array([collection] * len(docs),
                                    pa.string()),
             "payload": pa.array([_doc_json(d) for d in docs],
                                 pa.string()),
         })
-        final = os.path.join(self.spool_dir, f"batch_{bid:08d}.parquet")
-        tmp = final + ".tmp"
-        pq.write_table(table, tmp)
-        os.rename(tmp, final)
-        self._next_batch = bid + 1
-        return len(docs)
-
-    def read(self, spark: SparkSession) -> DataFrame:
-        return (spark.read.parquet(self.spool_dir)
-                .withColumn("doc_seq",
-                            F.col("batch_id") * self._MAX_PER_BATCH
-                            + F.col("doc_seq")))

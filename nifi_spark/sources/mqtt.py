@@ -26,12 +26,10 @@ reference's attribute surface (topic/qos/retained/dup).
 
 from __future__ import annotations
 
-import os
-import re
 import struct
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from nifi_spark.spool import Spool
 
 _SPOOL_SCHEMA = ("batch_id bigint, msg_idx bigint, topic string, "
                  "qos int, retained boolean, dup boolean, "
@@ -406,49 +404,26 @@ def mqtt_loopback(broker: MqttBroker):
     return a.recv, a.sendall, join
 
 
-class ConsumeMQTTSource:
+class ConsumeMQTTSource(Spool):
     """Drain-to-spool bridge: subscribe + drain per call → one spool
     file with the reference's attribute surface (ConsumeMQTT.java's
     mqtt.topic/qos/isRetained/isDuplicate)."""
 
-    _MAX_PER_BATCH = 1_000_000
+    schema = _SPOOL_SCHEMA
 
     def __init__(self, spool_dir: str):
-        self.spool_dir = spool_dir
-        os.makedirs(spool_dir, exist_ok=True)
-        pat = re.compile(r"batch_(\d{8})\.parquet$")
-        ids = [int(m.group(1)) for f in os.listdir(spool_dir)
-               if (m := pat.match(f))]
-        self._next_batch = max(ids) + 1 if ids else 0
+        super().__init__(spool_dir)
 
     def drain(self, client: MqttClient, *filters: str) -> int:
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
         if filters:
             client.subscribe(*filters)
         msgs = client.drain()
-        if not msgs:
-            return 0
-        bid = self._next_batch
-        table = pa.table({
-            "batch_id": pa.array([bid] * len(msgs), pa.int64()),
-            "msg_idx": pa.array(range(len(msgs)), pa.int64()),
+        return self.land({
             "topic": pa.array([t for t, *_ in msgs], pa.string()),
             "qos": pa.array([q for _, _, q, _, _ in msgs], pa.int32()),
             "retained": pa.array([r for *_, r, _ in msgs], pa.bool_()),
             "dup": pa.array([d for *_, d in msgs], pa.bool_()),
             "payload": pa.array([p for _, p, *_ in msgs], pa.binary()),
         })
-        final = os.path.join(self.spool_dir, f"batch_{bid:08d}.parquet")
-        tmp = final + ".tmp"
-        pq.write_table(table, tmp)
-        os.rename(tmp, final)
-        self._next_batch = bid + 1
-        return len(msgs)
-
-    def read(self, spark: SparkSession) -> DataFrame:
-        df = spark.read.schema(_SPOOL_SCHEMA).parquet(self.spool_dir)
-        return df.withColumn(
-            "msg_seq",
-            F.col("batch_id") * self._MAX_PER_BATCH + F.col("msg_idx"))

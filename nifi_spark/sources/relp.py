@@ -18,11 +18,9 @@ Commands: open (offers key=value per line), syslog (one event), close.
 
 from __future__ import annotations
 
-import os
-import re
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from nifi_spark.spool import Spool
 
 _SPOOL_SCHEMA = ("batch_id bigint, msg_idx bigint, txnr bigint, "
                  "sender string, raw string")
@@ -165,47 +163,24 @@ def bytes_feed(data: bytes, chunk: int = 7):
     return read
 
 
-class ListenRELPSource:
+class ListenRELPSource(Spool):
     """Drain-to-spool bridge (listen.py pattern); rows keep the RELP
     txnr so downstream dedup/ordering can use the protocol's own
     sequence (ListenRELP emits it as the relp.txnr attribute)."""
 
-    _MAX_PER_BATCH = 1_000_000
+    schema = _SPOOL_SCHEMA
 
     def __init__(self, spool_dir: str):
-        self.spool_dir = spool_dir
-        os.makedirs(spool_dir, exist_ok=True)
-        pat = re.compile(r"batch_(\d{8})\.parquet$")
-        ids = [int(m.group(1)) for f in os.listdir(spool_dir)
-               if (m := pat.match(f))]
-        self._next_batch = max(ids) + 1 if ids else 0
+        super().__init__(spool_dir)
 
     def drain_connection(self, read, write,
                          sender: str = "unknown:0") -> int:
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
         events = serve_relp(read, write, sender=sender)
-        if not events:
-            return 0
-        bid = self._next_batch
-        table = pa.table({
-            "batch_id": pa.array([bid] * len(events), pa.int64()),
-            "msg_idx": pa.array(range(len(events)), pa.int64()),
+        return self.land({
             "txnr": pa.array([t for t, _, _ in events], pa.int64()),
             "sender": pa.array([s for _, s, _ in events], pa.string()),
             "raw": pa.array([d.decode("utf-8", errors="replace")
                              for _, _, d in events], pa.string()),
         })
-        final = os.path.join(self.spool_dir, f"batch_{bid:08d}.parquet")
-        tmp = final + ".tmp"
-        pq.write_table(table, tmp)
-        os.rename(tmp, final)
-        self._next_batch = bid + 1
-        return len(events)
-
-    def read(self, spark: SparkSession) -> DataFrame:
-        df = spark.read.schema(_SPOOL_SCHEMA).parquet(self.spool_dir)
-        return df.withColumn(
-            "msg_seq",
-            F.col("batch_id") * self._MAX_PER_BATCH + F.col("msg_idx"))

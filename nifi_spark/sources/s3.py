@@ -29,14 +29,11 @@ XML-body Query protocols.
 from __future__ import annotations
 
 import hashlib
-import os
-import re
 import urllib.parse
 from xml.etree import ElementTree as ET
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
-
 from ..ledger import KVState
+from ..spool import Spool
 from .sqs import SqsError, sigv4_sign, sigv4_verify
 
 
@@ -228,7 +225,7 @@ class S3Client:
             raise S3Error(f"delete failed: {status}")
 
 
-class ListS3Source:
+class ListS3Source(Spool):
     """ListS3's exact dedup contract: the newest lastModified becomes
     the watermark AND the keys at that exact timestamp are remembered
     (ListS3.java:156-168) — a second listing re-emits nothing, a new
@@ -236,23 +233,15 @@ class ListS3Source:
     not. Listing rows land in a parquet spool with the reference
     attribute surface."""
 
-    _MAX_PER_BATCH = 1_000_000
-
     def __init__(self, spool_dir: str, state: KVState,
                  key: str = "list_s3"):
-        self.spool_dir = spool_dir
+        super().__init__(spool_dir, None, None)
         self.state = state
         self.key = key
-        os.makedirs(spool_dir, exist_ok=True)
-        pat = re.compile(r"batch_(\d{8})\.parquet$")
-        ids = [int(m.group(1)) for f in os.listdir(spool_dir)
-               if (m := pat.match(f))]
-        self._next_batch = max(ids) + 1 if ids else 0
 
     def drain(self, client: S3Client, bucket: str, *,
               prefix: str = "", max_keys: int = 1000) -> int:
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
         st = self.state.get(self.key)
         wm = int(st.get("currentTimestamp", 0))
@@ -266,9 +255,7 @@ class ListS3Source:
             fresh.append(obj)
         if not fresh:
             return 0
-        bid = self._next_batch
-        table = pa.table({
-            "batch_id": pa.array([bid] * len(fresh), pa.int64()),
+        self.land({
             "filename": pa.array([o["filename"] for o in fresh],
                                  pa.string()),
             "bucket": pa.array([o["s3.bucket"] for o in fresh],
@@ -282,12 +269,6 @@ class ListS3Source:
             "store_class": pa.array([o["s3.storeClass"] for o in fresh],
                                     pa.string()),
         })
-        final = os.path.join(self.spool_dir,
-                             f"batch_{bid:08d}.parquet")
-        tmp = final + ".tmp"
-        pq.write_table(table, tmp)
-        os.rename(tmp, final)
-        self._next_batch = bid + 1
         new_wm = max(o["s3.lastModified"] for o in fresh)
         new_keys = [o["filename"] for o in fresh
                     if o["s3.lastModified"] == new_wm]
@@ -296,6 +277,3 @@ class ListS3Source:
         self.state.put(self.key, {"currentTimestamp": new_wm,
                                   "currentKeys": new_keys})
         return len(fresh)
-
-    def read(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self.spool_dir)

@@ -22,11 +22,12 @@ distributed scan.
 
 from __future__ import annotations
 
-import os
 import re
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from nifi_spark.spool import Spool
 
 _SPOOL_SCHEMA = ("batch_id bigint, msg_idx bigint, helo string, "
                  "src string, mail_from string, "
@@ -145,40 +146,29 @@ def lines_feed(data: bytes):
     return lambda: next(it, b"")
 
 
-class ListenSMTPSource:
+class ListenSMTPSource(Spool):
     """Drain-to-spool bridge for SMTP connections (the listen.py
     pattern: atomic-rename parquet, crash-safe monotonic batch ids,
     msg_seq global order on read)."""
 
-    _MAX_PER_BATCH = 1_000_000
+    schema = _SPOOL_SCHEMA
 
     def __init__(self, spool_dir: str, *, hostname: str = "nifi-spark",
                  max_message_size: int = 20 * 1024 * 1024):
-        self.spool_dir = spool_dir
+        super().__init__(spool_dir)
         self.hostname = hostname
         self.max_message_size = max_message_size
-        os.makedirs(spool_dir, exist_ok=True)
-        pat = re.compile(r"batch_(\d{8})\.parquet$")
-        ids = [int(m.group(1)) for f in os.listdir(spool_dir)
-               if (m := pat.match(f))]
-        self._next_batch = max(ids) + 1 if ids else 0
 
     def drain_connection(self, read_line, write,
                          src: str = "unknown:0") -> int:
         """Serve one connection; land its messages as one spool file.
         Returns messages landed."""
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
         msgs = serve_smtp(read_line, write, hostname=self.hostname,
                           src=src,
                           max_message_size=self.max_message_size)
-        if not msgs:
-            return 0
-        bid = self._next_batch
-        table = pa.table({
-            "batch_id": pa.array([bid] * len(msgs), pa.int64()),
-            "msg_idx": pa.array(range(len(msgs)), pa.int64()),
+        return self.land({
             "helo": pa.array([m.helo for m in msgs], pa.string()),
             "src": pa.array([m.src for m in msgs], pa.string()),
             "mail_from": pa.array([m.mail_from for m in msgs],
@@ -187,21 +177,12 @@ class ListenSMTPSource:
                                    pa.list_(pa.string())),
             "content": pa.array([m.content for m in msgs], pa.string()),
         })
-        final = os.path.join(self.spool_dir, f"batch_{bid:08d}.parquet")
-        tmp = final + ".tmp"
-        pq.write_table(table, tmp)
-        os.rename(tmp, final)
-        self._next_batch = bid + 1
-        return len(msgs)
 
     def read(self, spark: SparkSession) -> DataFrame:
         """Landed table + mime_type (the reference's
         CoreAttributes.MIME_TYPE, SmtpConsumer.java:167) and msg_seq."""
-        df = spark.read.schema(_SPOOL_SCHEMA).parquet(self.spool_dir)
-        return (df.withColumn("msg_seq",
-                              F.col("batch_id") * self._MAX_PER_BATCH
-                              + F.col("msg_idx"))
-                .withColumn("mime_type", F.lit("message/rfc822")))
+        return super().read(spark).withColumn(
+            "mime_type", F.lit("message/rfc822"))
 
 
 # ------------------------------------------------ client (PutEmail)

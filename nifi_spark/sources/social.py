@@ -34,51 +34,19 @@ listen/get source in this repo.
 from __future__ import annotations
 
 import json
-import os
-import re
 import urllib.parse
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from nifi_spark.spool import Spool
 
 ENDPOINT_SAMPLE = "Sample Endpoint"
 ENDPOINT_FIREHOSE = "Firehose Endpoint"
 ENDPOINT_FILTER = "Filter Endpoint"
 
 
-class _Spool:
-    def __init__(self, spool_dir: str):
-        self.spool_dir = spool_dir
-        os.makedirs(spool_dir, exist_ok=True)
-        pat = re.compile(r"batch_(\d{8})\.parquet$")
-        ids = [int(m.group(1)) for f in os.listdir(spool_dir)
-               if (m := pat.match(f))]
-        self._next_batch = max(ids) + 1 if ids else 0
-
-    def land(self, payloads: "list[str]", mime: str) -> int:
-        if not payloads:
-            return 0
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-        bid = self._next_batch
-        t = pa.table({
-            "batch_id": pa.array([bid] * len(payloads), pa.int64()),
-            "row_seq": pa.array(range(len(payloads)), pa.int64()),
-            "mime_type": pa.array([mime] * len(payloads)),
-            "payload": pa.array(payloads, pa.string()),
-        })
-        final = os.path.join(self.spool_dir,
-                             f"batch_{bid:08d}.parquet")
-        tmp = final + ".tmp"
-        pq.write_table(t, tmp)
-        os.rename(tmp, final)
-        self._next_batch = bid + 1
-        return len(payloads)
-
-    def read(self, spark: SparkSession) -> DataFrame:
-        return (spark.read.parquet(self.spool_dir)
-                .withColumn("event_seq",
-                            F.col("batch_id") * 1_000_000
-                            + F.col("row_seq")))
+def _payload_columns(payloads: "list[str]", mime: str) -> dict:
+    import pyarrow as pa
+    return {"mime_type": pa.array([mime] * len(payloads)),
+            "payload": pa.array(payloads, pa.string())}
 
 
 # ---------------------------------------------------------- twitter
@@ -107,7 +75,7 @@ class TwitterStreamServer:
                              sort_keys=True)
 
 
-class GetTwitterSource:
+class GetTwitterSource(Spool):
     """GetTwitter: drain a stream into the spool. Filter endpoint
     requires terms or follow or locations (customValidate)."""
 
@@ -125,7 +93,7 @@ class GetTwitterSource:
         self.endpoint = endpoint
         self.params = {"languages": languages, "terms": terms,
                        "follow": follow, "locations": locations}
-        self._spool = _Spool(spool_dir)
+        super().__init__(spool_dir, "row_seq", "event_seq")
 
     def drain(self, stream, max_events: int | None = None) -> int:
         out = []
@@ -133,10 +101,7 @@ class GetTwitterSource:
             out.append(line)
             if max_events and len(out) >= max_events:
                 break
-        return self._spool.land(out, "application/json")
-
-    def read(self, spark: SparkSession) -> DataFrame:
-        return self._spool.read(spark)
+        return self.land(_payload_columns(out, "application/json"))
 
 
 # -------------------------------------------------------- translate
@@ -216,7 +181,7 @@ class FakeTranslator:
 DEFAULT_WINEVT_QUERY = "*"
 
 
-class ConsumeWindowsEventLogSource:
+class ConsumeWindowsEventLogSource(Spool):
     """Drain a subscription (iterator of rendered event XML strings)
     into the spool; events longer than max_buffer bytes are DROPPED
     with a count (the reference logs and skips oversized renders)."""
@@ -228,7 +193,7 @@ class ConsumeWindowsEventLogSource:
         self.query = query
         self.max_buffer = max_buffer
         self.dropped = 0
-        self._spool = _Spool(spool_dir)
+        super().__init__(spool_dir, "row_seq", "event_seq")
 
     def drain(self, subscription) -> int:
         out = []
@@ -237,7 +202,4 @@ class ConsumeWindowsEventLogSource:
                 self.dropped += 1
                 continue
             out.append(xml)
-        return self._spool.land(out, "application/xml")
-
-    def read(self, spark: SparkSession) -> DataFrame:
-        return self._spool.read(spark)
+        return self.land(_payload_columns(out, "application/xml"))

@@ -28,13 +28,11 @@ tests wire it straight to `SolrServer.handle`.
 from __future__ import annotations
 
 import json
-import os
 import re
 import urllib.parse
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
-
 from ..ledger import KVState
+from ..spool import Spool
 
 
 class SolrError(IOError):
@@ -228,7 +226,7 @@ def put_solr(transport, base_url: str, core: str,
     return len(docs)
 
 
-class GetSolrSource:
+class GetSolrSource(Spool):
     """GetSolr incremental drain: remembers the last end of the date
     window in KVState, each drain fetches ``date_field:[wm TO now]``
     ascending via cursorMark, lands one spool file, and commits the
@@ -237,18 +235,11 @@ class GetSolrSource:
     bound is EXCLUSIVE on re-fetch ({wm TO ...]) so the boundary doc
     isn't duplicated."""
 
-    _MAX_PER_BATCH = 1_000_000
-
     def __init__(self, spool_dir: str, state: KVState,
                  key: str = "get_solr"):
-        self.spool_dir = spool_dir
+        super().__init__(spool_dir, "doc_seq", "doc_seq")
         self.state = state
         self.key = key
-        os.makedirs(spool_dir, exist_ok=True)
-        pat = re.compile(r"batch_(\d{8})\.parquet$")
-        ids = [int(m.group(1)) for f in os.listdir(spool_dir)
-               if (m := pat.match(f))]
-        self._next_batch = max(ids) + 1 if ids else 0
 
     def drain(self, client: SolrClient, *, date_field: str,
               now, rows: int = 10, q: str = "*:*",
@@ -263,7 +254,6 @@ class GetSolrSource:
         `fields` must include the date field (needed for the
         watermark) and id (the cursor tiebreak)."""
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
         if fields and (date_field not in fields or "id" not in fields):
             raise SolrError("fields must include the date field and id")
@@ -279,27 +269,13 @@ class GetSolrSource:
                     for d in docs]
         if not docs:
             return 0
-        bid = self._next_batch
-        table = pa.table({
-            "batch_id": pa.array([bid] * len(docs), pa.int64()),
-            "doc_seq": pa.array(range(len(docs)), pa.int64()),
+        self.land({
             "core": pa.array([client.core] * len(docs), pa.string()),
             "payload": pa.array(
                 [json.dumps(d, sort_keys=True, separators=(",", ":"))
                  for d in docs], pa.string()),
             date_field: pa.array([d[date_field] for d in docs]),
         })
-        final = os.path.join(self.spool_dir, f"batch_{bid:08d}.parquet")
-        tmp = final + ".tmp"
-        pq.write_table(table, tmp)
-        os.rename(tmp, final)
-        self._next_batch = bid + 1
         self.state.put(self.key,
                        {"watermark": docs[-1][date_field]})
         return len(docs)
-
-    def read(self, spark: SparkSession) -> DataFrame:
-        return (spark.read.parquet(self.spool_dir)
-                .withColumn("doc_seq",
-                            F.col("batch_id") * self._MAX_PER_BATCH
-                            + F.col("doc_seq")))

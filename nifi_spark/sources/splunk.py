@@ -33,13 +33,11 @@ drains land parquet spool files read back as a DataFrame.
 from __future__ import annotations
 
 import json
-import os
 import re
 import urllib.parse
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
-
 from ..ledger import KVState
+from ..spool import Spool
 
 DATE_TIME_FORMAT_NOTE = "yyyy-MM-dd'T'HH:mm:ss.SSSZ"  # GetSplunk.java:156
 EARLIEST_TIME_KEY = "earliestTime"
@@ -132,7 +130,7 @@ class SplunkServer:
         return 200, payload.encode()
 
 
-class GetSplunkSource:
+class GetSplunkSource(Spool):
     """GetSplunk's managed time-range drain over an injectable
     transport, landing each non-empty export into a parquet spool
     file with the reference's three splunk.* attributes."""
@@ -147,7 +145,7 @@ class GetSplunkSource:
         assert time_range_strategy in (MANAGED_BEGINNING,
                                        MANAGED_CURRENT, PROVIDED)
         assert time_field_strategy in (EVENT_TIME, INDEX_TIME)
-        self.spool_dir = spool_dir
+        super().__init__(spool_dir, "row_seq", "event_seq")
         self.state = state
         self.key = key
         self.base_url = base_url.rstrip("/")
@@ -157,11 +155,6 @@ class GetSplunkSource:
         self.earliest_prop = earliest_time
         self.latest_prop = latest_time
         self.output_mode = output_mode
-        os.makedirs(spool_dir, exist_ok=True)
-        pat = re.compile(r"batch_(\d{8})\.parquet$")
-        ids = [int(m.group(1)) for f in os.listdir(spool_dir)
-               if (m := pat.match(f))]
-        self._next_batch = max(ids) + 1 if ids else 0
 
     def _fingerprint(self) -> str:
         # onPropertyModified: query/field-strategy/range-strategy/
@@ -221,31 +214,13 @@ class GetSplunkSource:
 
     def _land(self, rows: "list[str]", earliest: str | None,
               latest: str | None) -> int:
-        if not rows:
-            return 0
         import pyarrow as pa
-        import pyarrow.parquet as pq
-        bid = self._next_batch
-        table = pa.table({
-            "batch_id": pa.array([bid] * len(rows), pa.int64()),
-            "row_seq": pa.array(range(len(rows)), pa.int64()),
+        return self.land({
             "payload": pa.array(rows, pa.string()),
             "splunk_query": pa.array([self.query] * len(rows)),
             "splunk_earliest_time": pa.array([earliest or ""] * len(rows)),
             "splunk_latest_time": pa.array([latest or ""] * len(rows)),
         })
-        final = os.path.join(self.spool_dir, f"batch_{bid:08d}.parquet")
-        tmp = final + ".tmp"
-        pq.write_table(table, tmp)
-        os.rename(tmp, final)
-        self._next_batch = bid + 1
-        return len(rows)
-
-    def read(self, spark: SparkSession) -> DataFrame:
-        return (spark.read.parquet(self.spool_dir)
-                .withColumn("event_seq",
-                            F.col("batch_id") * 1_000_000
-                            + F.col("row_seq")))
 
 
 def unescape_delimiter(d: str | None) -> str | None:

@@ -34,12 +34,11 @@ from __future__ import annotations
 
 import hashlib
 import hmac
-import os
 import re
 import urllib.parse
 from xml.etree import ElementTree as ET
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from nifi_spark.spool import Spool
 
 
 class SqsError(IOError):
@@ -322,36 +321,25 @@ class SqsClient:
 # -------------------------------------------------------- spool bridge
 
 
-class GetSQSSource:
+class GetSQSSource(Spool):
     """GetSQS drain loop → parquet spool: receive up to
     `max_messages` per call, land them, then delete (the reference's
     auto-delete-after-emit contract — at-least-once: a crash between
     land and delete re-delivers)."""
 
-    _MAX_PER_BATCH = 1_000_000
-
     def __init__(self, spool_dir: str):
-        self.spool_dir = spool_dir
-        os.makedirs(spool_dir, exist_ok=True)
-        pat = re.compile(r"batch_(\d{8})\.parquet$")
-        ids = [int(m.group(1)) for f in os.listdir(spool_dir)
-               if (m := pat.match(f))]
-        self._next_batch = max(ids) + 1 if ids else 0
+        super().__init__(spool_dir, "msg_seq", "msg_seq")
 
     def drain(self, client: SqsClient, *, max_messages: int = 10,
               auto_delete: bool = True) -> int:
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
         landed = 0
         while True:
             msgs = client.receive_messages(max_messages=max_messages)
             if not msgs:
                 return landed
-            bid = self._next_batch
-            table = pa.table({
-                "batch_id": pa.array([bid] * len(msgs), pa.int64()),
-                "msg_seq": pa.array(range(len(msgs)), pa.int64()),
+            landed += self.land({
                 "message_id": pa.array(
                     [m["message_id"] for m in msgs], pa.string()),
                 "receipt_handle": pa.array(
@@ -362,19 +350,6 @@ class GetSQSSource:
                     [sorted(m["attributes"].items()) for m in msgs],
                     pa.map_(pa.string(), pa.string())),
             })
-            final = os.path.join(self.spool_dir,
-                                 f"batch_{bid:08d}.parquet")
-            tmp = final + ".tmp"
-            pq.write_table(table, tmp)
-            os.rename(tmp, final)
-            self._next_batch = bid + 1
-            landed += len(msgs)
             if auto_delete:
                 for m in msgs:
                     client.delete_message(m["receipt_handle"])
-
-    def read(self, spark: SparkSession) -> DataFrame:
-        return (spark.read.parquet(self.spool_dir)
-                .withColumn("msg_seq",
-                            F.col("batch_id") * self._MAX_PER_BATCH
-                            + F.col("msg_seq")))

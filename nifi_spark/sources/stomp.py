@@ -31,10 +31,7 @@ deterministic batch boundary with no timing dependence.
 
 from __future__ import annotations
 
-import os
-import re
-
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from nifi_spark.spool import Spool
 
 
 class StompError(IOError):
@@ -372,31 +369,20 @@ _JMS_TYPE = "String"   # STOMP headers are strings; the reference's
 # — over STOMP every user property arrives as PROP_TYPE_STRING.
 
 
-class GetJMSSource:
+class GetJMSSource(Spool):
     """Drain-to-spool bridge (GetJMSQueue's receive loop): one
     client.drain per drain call → one spool file, message properties
     flattened the reference way — ``jms.<name>`` value columns live in
     a map alongside ``jms.<name>.type`` (util/JmsFactory.java:442-482;
     all String over STOMP)."""
 
-    _MAX_PER_BATCH = 1_000_000
-
     def __init__(self, spool_dir: str):
-        self.spool_dir = spool_dir
-        os.makedirs(spool_dir, exist_ok=True)
-        pat = re.compile(r"batch_(\d{8})\.parquet$")
-        ids = [int(m.group(1)) for f in os.listdir(spool_dir)
-               if (m := pat.match(f))]
-        self._next_batch = max(ids) + 1 if ids else 0
+        super().__init__(spool_dir, "msg_seq", "msg_seq")
 
     def drain(self, client: StompClient) -> int:
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
         msgs = client.drain()
-        if not msgs:
-            return 0
-        bid = self._next_batch
         dests, mids, bodies, attrs = [], [], [], []
         for headers, body in msgs:
             dests.append(headers.get("destination", ""))
@@ -411,27 +397,13 @@ class GetJMSSource:
                 flat[f"jms.{k}"] = v
                 flat[f"jms.{k}.type"] = _JMS_TYPE
             attrs.append(flat)
-        table = pa.table({
-            "batch_id": pa.array([bid] * len(msgs), pa.int64()),
-            "msg_seq": pa.array(range(len(msgs)), pa.int64()),
+        return self.land({
             "destination": pa.array(dests, pa.string()),
             "message_id": pa.array(mids, pa.string()),
             "payload": pa.array(bodies, pa.binary()),
             "attributes": pa.array(
                 attrs, pa.map_(pa.string(), pa.string())),
         })
-        final = os.path.join(self.spool_dir, f"batch_{bid:08d}.parquet")
-        tmp = final + ".tmp"
-        pq.write_table(table, tmp)
-        os.rename(tmp, final)
-        self._next_batch = bid + 1
-        return len(msgs)
-
-    def read(self, spark: SparkSession) -> DataFrame:
-        return (spark.read.parquet(self.spool_dir)
-                .withColumn("msg_seq",
-                            F.col("batch_id") * self._MAX_PER_BATCH
-                            + F.col("msg_seq")))
 
 
 def put_jms(client: StompClient, destination: str,

@@ -52,6 +52,8 @@ import zlib
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from nifi_spark.spool import Spool, publish_json
+
 _SPOOL_SCHEMA = ("batch_id bigint, filename string, original_path string, "
                  "start_pos bigint, end_pos bigint, content string, "
                  "mime_type string")
@@ -78,30 +80,29 @@ def _crc_prefix(path: str, n: int) -> int:
     return crc & 0xFFFFFFFF
 
 
-class TailFileSource:
+class TailFileSource(Spool):
     """Tail one rolling file into a parquet spool.
 
     `state_path` is the atomic-JSON recovery state (the StateManager
     analog); construct a NEW instance over the same state/spool after a
-    crash and it resumes with the reference's checksum gate."""
+    crash and it resumes with the reference's checksum gate. `read()`
+    is the landed chunk table (one row per consumed chunk/rolled file);
+    `lines(...)` explodes it to one row per text line."""
+
+    schema = _SPOOL_SCHEMA
 
     def __init__(self, tail_path: str, spool_dir: str, *,
                  rolling_pattern: str | None = None,
                  state_path: str | None = None,
                  charset: str = "utf-8"):
+        super().__init__(spool_dir, None, None)
         self.tail_path = os.path.abspath(tail_path)
-        self.spool_dir = spool_dir
         self.rolling_pattern = rolling_pattern
         self.charset = charset
-        os.makedirs(spool_dir, exist_ok=True)
         # underscore prefix keeps the state file invisible to Spark's
         # file index when the spool is read as a parquet table
         self.state_path = state_path or os.path.join(spool_dir,
                                                      "_tail_state.json")
-        pat = re.compile(r"batch_(\d{8})\.parquet$")
-        ids = [int(m.group(1)) for f in os.listdir(spool_dir)
-               if (m := pat.match(f))]
-        self._next_batch = max(ids) + 1 if ids else 0
         st = self._load_state()
         self.position = int(st.get("position", 0))
         self.timestamp = int(st.get("timestamp", 0))   # mtime_ns watermark
@@ -127,23 +128,17 @@ class TailFileSource:
             return {}
 
     def _persist(self) -> None:
-        state = {"filename": self.tail_path, "position": self.position,
-                 "timestamp": self.timestamp, "length": self.length,
-                 "checksum": self.checksum}
-        tmp = self.state_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(state, f)
-        os.replace(tmp, self.state_path)
+        publish_json(self.state_path, {
+            "filename": self.tail_path, "position": self.position,
+            "timestamp": self.timestamp, "length": self.length,
+            "checksum": self.checksum})
 
     # ------------------------------------------------------------ spool
 
     def _land(self, filename: str, start: int, end: int,
               content: bytes) -> None:
         import pyarrow as pa
-        import pyarrow.parquet as pq
-        bid = self._next_batch
-        table = pa.table({
-            "batch_id": pa.array([bid], pa.int64()),
+        self.land({
             "filename": pa.array([filename], pa.string()),
             "original_path": pa.array([self.tail_path], pa.string()),
             "start_pos": pa.array([start], pa.int64()),
@@ -153,11 +148,6 @@ class TailFileSource:
                                 pa.string()),
             "mime_type": pa.array(["text/plain"], pa.string()),
         })
-        final = os.path.join(self.spool_dir, f"batch_{bid:08d}.parquet")
-        tmp = final + ".tmp"
-        pq.write_table(table, tmp)
-        os.rename(tmp, final)      # visibility = atomic rename
-        self._next_batch = bid + 1
 
     # --------------------------------------------------------- rollover
 
@@ -283,20 +273,6 @@ class TailFileSource:
         return cut
 
     # ------------------------------------------------------------- read
-
-    def read(self, spark: SparkSession) -> DataFrame:
-        """The landed chunk table (one row per consumed chunk/rolled
-        file). `lines(...)` explodes to one row per text line."""
-        return spark.read.schema(_SPOOL_SCHEMA).parquet(self.spool_dir)
-
-    def read_stream(self, spark: SparkSession,
-                    max_files_per_trigger: "int | None" = None
-                    ) -> DataFrame:
-        reader = spark.readStream.schema(_SPOOL_SCHEMA)
-        if max_files_per_trigger is not None:
-            reader = reader.option("maxFilesPerTrigger",
-                                   max_files_per_trigger)
-        return reader.parquet(self.spool_dir)
 
     @staticmethod
     def lines(chunks: DataFrame) -> DataFrame:

@@ -23,11 +23,10 @@ from __future__ import annotations
 
 import base64
 import hashlib
-import os
 import re
 import struct
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from nifi_spark.spool import Spool
 
 _GUID = "258EAFA5-E914-47DA-95CA-C5AB0DC85B11"
 
@@ -276,32 +275,21 @@ def ws_loopback(*, path: str = "/ws"):
     return a.recv, a.sendall, join
 
 
-class ListenWebSocketSource:
+class ListenWebSocketSource(Spool):
     """Drain-to-spool bridge: one served connection → one spool file
     (text messages land in `text`, binary in `data`)."""
 
-    _MAX_PER_BATCH = 1_000_000
+    schema = _SPOOL_SCHEMA
 
     def __init__(self, spool_dir: str, *, path: str = "/ws"):
-        self.spool_dir = spool_dir
+        super().__init__(spool_dir)
         self.path = path
-        os.makedirs(spool_dir, exist_ok=True)
-        pat = re.compile(r"batch_(\d{8})\.parquet$")
-        ids = [int(m.group(1)) for f in os.listdir(spool_dir)
-               if (m := pat.match(f))]
-        self._next_batch = max(ids) + 1 if ids else 0
 
     def drain_connection(self, read, write) -> int:
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
         msgs = serve_websocket(read, write, path=self.path)
-        if not msgs:
-            return 0
-        bid = self._next_batch
-        table = pa.table({
-            "batch_id": pa.array([bid] * len(msgs), pa.int64()),
-            "msg_idx": pa.array(range(len(msgs)), pa.int64()),
+        return self.land({
             "kind": pa.array(["text" if op == OP_TEXT else "binary"
                               for op, _ in msgs], pa.string()),
             "text": pa.array([p.decode("utf-8", errors="replace")
@@ -310,15 +298,3 @@ class ListenWebSocketSource:
             "data": pa.array([p if op == OP_BINARY else None
                               for op, p in msgs], pa.binary()),
         })
-        final = os.path.join(self.spool_dir, f"batch_{bid:08d}.parquet")
-        tmp = final + ".tmp"
-        pq.write_table(table, tmp)
-        os.rename(tmp, final)
-        self._next_batch = bid + 1
-        return len(msgs)
-
-    def read(self, spark: SparkSession) -> DataFrame:
-        df = spark.read.schema(_SPOOL_SCHEMA).parquet(self.spool_dir)
-        return df.withColumn(
-            "msg_seq",
-            F.col("batch_id") * self._MAX_PER_BATCH + F.col("msg_idx"))

@@ -4,10 +4,11 @@ The sandbox has no Iceberg catalog, so the engine targets a clean storage
 seam with the same semantics an Iceberg `MERGE INTO` would give:
 
 * **Snapshot isolation + atomic commit**: every merge writes a new version
-  directory plus a JSON manifest; the commit point is a single atomic
-  `os.replace` of the VERSION pointer (NiFi analog: the FlowFile-repo WAL
-  update is the session-commit atomicity point, StandardProcessSession.java:
-  361-370; here the pointer swap plays that role).
+  directory plus a JSON manifest; the commit point is a single durable
+  publish (fsync, `os.replace`, directory fsync) of the VERSION pointer
+  (NiFi analog: the FlowFile-repo WAL update is the session-commit
+  atomicity point, StandardProcessSession.java:361-370; here the pointer
+  swap plays that role).
 * **Hash-bucketed layout**: rows live in `bucket = pmod(xxhash64(repo,path),
   n_buckets)` partitions. A merge only reads and rewrites *dirty* buckets —
   cost scales with the change set, not the table. At 100 TB you'd raise
@@ -36,6 +37,8 @@ import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from nifi_spark.spool import publish_json
 
 _BASE = [("repo", "string"), ("path", "string"), ("commit", "string"),
          ("lang", "string"), ("content", "string")]
@@ -78,14 +81,8 @@ class SnapshotTableStore:
         """Write manifest, then atomically swap the VERSION pointer."""
         v = manifest["version"]
         os.makedirs(os.path.join(self.root, "manifests"), exist_ok=True)
-        mp = self._manifest_path(v)
-        with open(mp + ".tmp", "w") as f:
-            json.dump(manifest, f)
-        os.replace(mp + ".tmp", mp)
-        pp = self._ptr_path()
-        with open(pp + ".tmp", "w") as f:
-            f.write(str(v))
-        os.replace(pp + ".tmp", pp)  # ← the atomic commit point
+        publish_json(self._manifest_path(v), manifest)
+        publish_json(self._ptr_path(), v)  # ← the atomic commit point
         return v
 
     def init(self, extra_schema: list[tuple[str, str]] | None = None) -> None:

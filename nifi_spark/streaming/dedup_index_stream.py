@@ -30,6 +30,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from nifi_spark.datalib.dedup import build_dedup_index, dedup_incremental
+from nifi_spark.spool import publish
 
 _RESULT_SCHEMA = "doc_id long, status string, matched_id long"
 
@@ -147,29 +148,39 @@ def compact_index(spark: SparkSession, index_path: str,
     folded."""
     import shutil
 
+    base = os.path.join(index_path, "batch=-1")
+    old = os.path.join(index_path, "_compact_old")
+    tmp = os.path.join(index_path, "_compact_tmp")
+    # finish a run that died mid-swap: an old base moved aside with no
+    # new one in place goes back (its rows are folded again below); one
+    # left beside the new base is already folded into it
+    if os.path.isdir(old):
+        if os.path.isdir(base):
+            shutil.rmtree(old)
+        else:
+            os.rename(old, base)
     subs = sorted(
         (int(d.split("=", 1)[1]), d)
         for d in os.listdir(index_path)
         if d.startswith("batch=") and d != "batch=-1")
-    fold = [d for _, d in subs[:len(subs) - keep_last]] if keep_last \
-        else [d for _, d in subs]
+    fold = [d for _, d in subs[:max(0, len(subs) - keep_last)]]
     if not fold:
         return 0
     paths = [os.path.join(index_path, d) for d in fold]
-    base = os.path.join(index_path, "batch=-1")
     if os.path.isdir(base):
         paths.append(base)
     merged = (spark.read.schema("doc_id long, kind string, key string")
               .parquet(*paths))
-    tmp = os.path.join(index_path, "_compact_tmp")
     merged.write.mode("overwrite").parquet(tmp)
-    # publish: swap the tmp dir in, then drop the folded subdirs —
-    # crash between the two leaves duplicate rows, which the
-    # min-per-key collapse reads through harmlessly (re-run to finish)
+    # publish: move the old base aside, swap the new one in, and only
+    # then delete what it replaces — a crash at any point loses no row
+    # (a crash after the swap leaves the folded subdirs' rows twice,
+    # which the min-per-key collapse reads through; re-run to finish)
     if os.path.isdir(base):
-        shutil.rmtree(base)
-    os.rename(tmp, base)
+        os.rename(base, old)
+    publish(tmp, base)
     for p in paths:
-        if p != base and os.path.isdir(p):
+        if p != base:
             shutil.rmtree(p)
+    shutil.rmtree(old, ignore_errors=True)
     return len(fold)

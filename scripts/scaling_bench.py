@@ -39,10 +39,6 @@ CHILD = r"""
 import sys, os, tempfile, time, json, shutil
 sys.path.insert(0, %(repo)r)
 cpus, n, nb, reps = %(cpus)d, %(n)d, %(batches)d, %(reps)d
-# fixed heap at both levels: peak usage is far below it either way, and
-# >32g pinned heaps alongside the tmpfs working set push the box into
-# memory-reclaim storms that swamp the measurement
-os.environ.setdefault("SPARK_DRIVER_MEM", "32g")
 from nifi_spark.session import get_spark
 from nifi_spark.fixtures import gen_changelog_spark
 from nifi_spark.ledger import OffsetLedger

@@ -251,3 +251,19 @@ def test_txn_transfer_multiframe_and_unknown_txn():
     assert broker.partitions[0][0][3] == big
     with pytest.raises(Amqp10Error):
         recv.discharge_txn(txn, fail=False)   # unknown txn-id now
+
+
+def test_txn_declares_reuse_coordinator_link_zero():
+    """A fresh client's coordinator link gets handle 0; later declares
+    must reuse it instead of attaching a new link each time."""
+    broker = EventHubBroker("hub1", 1, users={"u": "p"})
+    r, w, join = eventhub_loopback(broker)
+    recv = EventHubReceiver(r, w, hub="hub1", user="u", password="p")
+    attaches = []
+    attach = recv._attach_coordinator
+    recv._attach_coordinator = lambda: attaches.append(1) or attach()
+    for fail in (False, True):
+        recv.discharge_txn(recv.declare_txn(), fail=fail)
+    assert len(attaches) == 1
+    recv.close()
+    join()

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from nifi_spark.streaming import StreamingDedupIndex
@@ -133,3 +134,51 @@ def test_compact_index_is_read_equivalent(spark, tmp_path):
     # idempotent re-run folds the rest
     assert compact_index(spark, src.index_path) == 2  # batch=2 + batch=3
     assert compact_index(spark, src.index_path) == 0
+
+
+def _index_dirs(spark, index_path, n):
+    """`n` batch=N index subdirs of three rows each, written directly."""
+    for b in range(n):
+        spark.createDataFrame(
+            [(b * 10 + i, "exact", f"k{b}-{i}") for i in range(3)],
+            "doc_id long, kind string, key string") \
+            .write.parquet(os.path.join(index_path, f"batch={b}"))
+
+
+def _index_rows(spark, index_path):
+    src = StreamingDedupIndex(spark, "unused", index_path,
+                              index_path + "_results", "unused")
+    return sorted(map(tuple, src.read_index().collect()))
+
+
+def test_compact_index_crash_mid_swap_loses_no_row(spark, tmp_path,
+                                                   monkeypatch):
+    from nifi_spark.streaming import dedup_index_stream as dis
+    index = str(tmp_path / "index")
+    _index_dirs(spark, index, 3)
+    assert dis.compact_index(spark, index, keep_last=1) == 2  # a base
+    before = _index_rows(spark, index)
+    real = os.replace
+
+    def crash(src, dst, *a, **kw):     # die before the new base lands
+        if src.endswith("_compact_tmp"):
+            raise OSError("injected crash")
+        return real(src, dst, *a, **kw)
+
+    monkeypatch.setattr(os, "rename", crash)
+    monkeypatch.setattr(os, "replace", crash)
+    with pytest.raises(OSError, match="injected"):
+        dis.compact_index(spark, index)
+    monkeypatch.undo()
+    assert dis.compact_index(spark, index) == 1   # the re-run finishes
+    assert _index_rows(spark, index) == before
+    assert sorted(os.listdir(index)) == ["batch=-1"]
+
+
+def test_compact_index_keep_last_beyond_count_folds_nothing(spark,
+                                                            tmp_path):
+    from nifi_spark.streaming.dedup_index_stream import compact_index
+    index = str(tmp_path / "index")
+    _index_dirs(spark, index, 2)
+    assert compact_index(spark, index, keep_last=3) == 0
+    assert sorted(os.listdir(index)) == ["batch=0", "batch=1"]

@@ -95,6 +95,7 @@ def test_put_email_bounded_sink(spark):
          ("alerts@eng", ["oncall@eng", "lead@eng"], "ok", "recovered")],
         "f string, t array<string>, s string, b string")
     landed: list = []
+    servers: list = []
 
     def connect():
         a, b = socket.socketpair()
@@ -104,12 +105,16 @@ def test_put_email_bounded_sink(spark):
             landed.extend(serve_smtp(f.readline, b.sendall))
             b.close()
 
-        threading.Thread(target=run, daemon=True).start()
+        t = threading.Thread(target=run, daemon=True)
+        t.start()
+        servers.append(t)
         f = a.makefile("rb")
         return f.readline, a.sendall
 
     assert put_email(df, from_col="f", to_col="t", subject_col="s",
                      body_col="b", connect=connect) == 2
+    for t in servers:        # each server appends to `landed` on exit
+        t.join(timeout=30)
     assert sorted(m.recipients[0] for m in landed) == \
         ["oncall@eng", "oncall@eng"]
     assert any("Subject: disk full" in m.content for m in landed)
