@@ -10812,14 +10812,14 @@ tagged AS (
   SELECT i.event_id, i.rn,
          CASE WHEN rn < a THEN 0 WHEN rn < a + b THEN 1
               WHEN rn < a + b + c THEN 2 WHEN rn < a + b + c + d THEN 3
-              ELSE 4 END AS bid
+              WHEN rn < a + b + c + d + e THEN 4 END AS bid
   FROM ids i CROSS JOIN p),
 agg AS (
   SELECT bid, count(*)::BIGINT AS n_lines,
          sum(event_id)::BIGINT AS sum_id,
          md5(string_agg(printf('ev%08d', event_id) || chr(10),
                         '' ORDER BY rn)) AS content_md5
-  FROM tagged GROUP BY bid)
+  FROM tagged WHERE bid IS NOT NULL GROUP BY bid)
 SELECT g.bid::BIGINT AS batch_id,
        CASE g.bid
          WHEN 0 THEN 'f.0-' || (11 * a) || '.log'

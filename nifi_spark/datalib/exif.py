@@ -321,6 +321,11 @@ def _id3v2_frames(blob: bytes, ver: int, flags: int, size: int
     v2.4 = 4+4 syncsafe; text payload leads with an encoding byte
     (0 latin-1, 1 utf-16+BOM, 2 utf-16-be, 3 utf-8), NUL-terminated."""
     out: list[tuple[str, str]] = []
+    if flags & 0x80 or (ver == 2 and flags & 0x40):
+        # unsynchronised tag (0xFF 0x00 stuffing shifts every frame
+        # size), or a v2.2 tag flagged compressed: no frame is readable
+        # as plain bytes, so keep only the version header pair
+        return out
     pos, end = 10, min(10 + size, len(blob))
     if flags & 0x40 and ver in (3, 4) and pos + 4 <= end:
         ext = int.from_bytes(blob[pos:pos + 4], "big")

@@ -3,19 +3,21 @@
 One NiFi session-commit == one micro-batch here (SURVEY.md §3.1 mapping):
 
     read change slice (lsn > ledger watermark, pushdown to parquet scan)
-      → split at schema_change boundaries, apply DDL serially between
-        sub-batches (NiFi sidesteps this — every processor is schema-less;
-        ConvertJSONToSQL.java:101-113 is its drift-policy ancestor)
-      → normalize changes onto the store schema (narrow projection)
-      → SnapshotTableStore.merge — ONE max_by hash-agg over
-        current∪changes does LWW compaction per (repo,path) AND the
-        upsert in a single shuffle (map-side partial combine ⇒ hot-repo
-        skew tolerated; a window/sort would shuffle+sort the whole slice)
+      → apply the batch's schema_change events in LSN order
+        (SnapshotTableStore.evolve — metadata-only commits; NiFi sidesteps
+        this, every processor is schema-less; ConvertJSONToSQL.java:101-113
+        is its drift-policy ancestor)
+      → normalize changes onto the store schema (narrow projection; each
+        row is read under the column names of its own schema epoch)
+      → SnapshotTableStore.merge — ONE merge over all of the batch's data:
+        a narrow (key, lsn, op) agg picks each key's LWW winner over
+        current∪changes, a 1:1 join fetches the winning rows
         → dirty-bucket snapshot commit (atomic)
       → provenance records per stage/partition
       → OffsetLedger.commit (checksum'd) — AFTER the table commit
 
-Crash matrix (tests/test_resume.py): crash before merge ⇒ nothing happened;
+Crash matrix (tests/test_resume.py): crash before merge ⇒ nothing happened
+(DDL already committed is skipped on replay by the store's lsn gate);
 crash between merge and ledger ⇒ batch replays, `_last_lsn` LWW makes the
 replay idempotent; crash after ledger ⇒ batch never replays. Exactly-once
 final state in all three.
@@ -23,12 +25,12 @@ final state in all three.
 Duplicate (key,lsn) re-deliveries — NiFi's DetectDuplicate concern
 (standard/DetectDuplicate.java:58-68) — are absorbed by two mechanisms:
 cross-batch dups have lsn <= watermark and never pass the slice filter;
-in-batch dups collapse in the max_by compaction (identical payload).
+in-batch dups are dropped by `dedup_deliveries` before the merge.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -43,12 +45,10 @@ class BatchStats:
     lsn_from: int
     lsn_to: int
     events: int = 0
-    data_events: int = 0
     schema_events: int = 0
-    upserts: int = 0
-    deletes: int = 0
     quarantined: int = 0
-    sub_batches: int = 0
+    sub_batches: int = 0  # schema epochs in the batch (DDL events + 1),
+    # not merges: a batch is one merge
     table_version: int = -1
 
 
@@ -70,8 +70,6 @@ class CdcPipeline:
     bulk_mode: bool = False  # steady-state bulk CDC: skip the per-batch
     # dirty-bucket probe (every bucket assumed dirty — see
     # SnapshotTableStore.merge)
-    coalesce_ddl: bool = False  # True: apply all DDL up-front (perf mode,
-    # valid while data events never reference evolved columns)
     ddl_in_stream: bool = True  # False: the feed carries no schema_change
     # events (steady-state bulk CDC where DDL arrives out-of-band — the
     # usual Debezium topology) — skips the per-batch schema-scan job, so a
@@ -85,10 +83,10 @@ class CdcPipeline:
     # quarantine write is at-least-once: a crash-replayed batch re-appends
     # its poison rows; readers dedup on (lsn) if they need exactly-once.
     merge_strategy: str = "argmax"  # SnapshotTableStore.merge strategy:
-    # 'argmax' (COW, shuffle-narrow) | 'maxby' (COW, wide agg) | 'delta'
-    # (merge-on-read: per-bucket delta appends, bytes-written ∝ change
-    # set — the steady-state small-batch shape; run store.compact()
-    # periodically to restore the zero-agg read path)
+    # 'argmax' (copy-on-write, shuffle-narrow) | 'delta' (merge-on-read:
+    # per-bucket delta appends, bytes-written ∝ change set — the
+    # steady-state small-batch shape; run store.compact() periodically
+    # to restore the zero-agg read path)
     dedup_deliveries: bool = True  # at-least-once feeds can re-deliver the
     # same (key, lsn) inside one batch; the merge's 1:1 winner join
     # requires (key,lsn)-unique changes, so dedup the SLICE here (a
@@ -96,7 +94,6 @@ class CdcPipeline:
     # table). False for exactly-once feeds (a real binlog, where the LSN
     # is a unique log position) — then a batch has no dedup exchange at
     # all. DetectDuplicate analog, standard/DetectDuplicate.java:58-68.
-    history: list[BatchStats] = field(default_factory=list)
 
     # ---------------- source ----------------
     def _read_slice(self, lsn_from_excl: int, lsn_to_incl: int) -> DataFrame:
@@ -109,22 +106,42 @@ class CdcPipeline:
                         & (F.col("lsn") <= F.lit(lsn_to_incl))))
 
     # ---------------- change normalization ----------------
-    def _normalize_changes(self, data: DataFrame) -> DataFrame:
+    def _normalize_changes(self, data: DataFrame, ddl_lsns: list[int],
+                           schemas: list[list[tuple[str, str]]]) -> DataFrame:
         """Project raw events onto the store schema + (op, lsn) — a pure
         narrow projection, NO shuffle.
 
+        ``schemas[k]`` is the store schema in force for rows with
+        ``ddl_lsns[k-1] <= lsn < ddl_lsns[k]`` (epoch 0 before the first
+        DDL, the last epoch after the last one). Store columns are
+        positional (adds append, renames keep the position), so each row
+        reads position i from the data column its own epoch names there,
+        or null where that epoch has no such column — what applying the
+        batch serially, one merge per epoch, would store. A position that
+        every epoch maps to the same data column (or to none) is one plain
+        expression, so a batch without DDL, or whose DDL columns carry no
+        values in the feed, projects exactly as a DDL-free one.
+
         LWW compaction (one winner per key by LSN) happens exactly once,
-        inside ``SnapshotTableStore.merge``'s max_by hash-agg over
-        current∪changes. An earlier version pre-compacted here with its
-        own groupBy — a second full shuffle on the same key that the
-        merge agg then repeated; dropping it roughly halves shuffle
-        volume per batch. Same-batch delete→re-insert, trailing-delete
-        tombstones, and duplicate (key,lsn) re-deliveries all resolve
-        identically in the single max-by-LSN reduce.
+        inside ``SnapshotTableStore.merge``; same-batch delete→re-insert
+        and trailing-delete tombstones resolve in that single reduce.
         """
+        def source(name: str | None, dtype: str):
+            return (F.col(name) if name is not None
+                    else F.lit(None).cast(dtype))
+
+        out = []
+        for i, (name, dtype) in enumerate(schemas[-1]):
+            srcs = [s[i][0] if i < len(s) and s[i][0] in data.columns
+                    else None for s in schemas]
+            expr = source(srcs[-1], dtype)
+            if len(set(srcs)) > 1:
+                for b, src in reversed(list(zip(ddl_lsns, srcs))):
+                    expr = F.when(F.col("lsn") < b,
+                                  source(src, dtype)).otherwise(expr)
+            out.append(expr.alias(name))
         return data.select(
-            *[F.col(c) if c in data.columns else F.lit(None).cast(t).alias(c)
-              for c, t in self.store.schema_columns()],
+            *out,
             F.when(F.col("op") == "delete", "delete").otherwise("upsert").alias("op"),
             "lsn")
 
@@ -144,8 +161,8 @@ class CdcPipeline:
             if self.provenance:
                 self.provenance.emit(sl, "RECEIVE", batch_id, "tail")
 
-            # schema-change boundaries (tiny driver-side list; NiFi's analog
-            # is per-record — we split the batch instead)
+            # schema-change events (tiny driver-side list; NiFi's analog
+            # is per-record)
             if self.ddl_in_stream:
                 sc = (sl.filter(F.col("op") == "schema_change")
                         .select("lsn", "sc_kind", "sc_column", "sc_new_name",
@@ -159,30 +176,23 @@ class CdcPipeline:
             data = (sl.filter(~F.col("op").eqNullSafe("schema_change"))
                     if self.ddl_in_stream else sl)
             stats.schema_events = len(sc)
+            stats.sub_batches = len(sc) + 1
 
-            if self.coalesce_ddl:
-                for r in sc:
-                    self.store.evolve(r.sc_kind, r.sc_column, r.sc_new_name,
-                                      r.sc_dtype or "string", lsn=r.lsn)
-                sc = []
-
-            lo = wm
-            boundaries = [r.lsn for r in sc] + [lsn_to_incl + 1]
-            for i, b in enumerate(boundaries):
-                sub = data.filter((F.col("lsn") > lo) & (F.col("lsn") < b))
-                self._apply_data(sub, batch_id, stats)
-                if i < len(sc):
-                    r = sc[i]
-                    self.store.evolve(r.sc_kind, r.sc_column, r.sc_new_name,
-                                      r.sc_dtype or "string", lsn=r.lsn)
-                lo = b - 1
-                stats.sub_batches += 1
+            # all DDL first (a crash replay finds it committed and the
+            # store's lsn gate skips it), then one merge that reads each
+            # row under its own epoch's schema
+            schemas = [self.store.schema_columns()]
+            for r in sc:
+                self.store.evolve(r.sc_kind, r.sc_column, r.sc_new_name,
+                                  r.sc_dtype or "string", lsn=r.lsn)
+                schemas.append(self.store.schema_columns())
+            self._apply_data(data, batch_id, stats, [r.lsn for r in sc],
+                             schemas)
 
             cs = slice_checksum(data) if self.checksum else None
             stats.table_version = self.store.current_version()
             self.ledger.commit(self.stream, lsn_to_incl, batch_id, cs,
                                stats.table_version)
-            self.history.append(stats)
             return stats
         finally:
             # always release the cached slice — a failed batch must not pin
@@ -192,7 +202,9 @@ class CdcPipeline:
 
     _VALID_OPS = ("insert", "update", "delete", "upsert")
 
-    def _apply_data(self, sub: DataFrame, batch_id: int, stats: BatchStats) -> None:
+    def _apply_data(self, data: DataFrame, batch_id: int, stats: BatchStats,
+                    ddl_lsns: list[int],
+                    schemas: list[list[tuple[str, str]]]) -> None:
         if self.quarantine_path:
             bad = (F.col("repo").isNull() | F.col("path").isNull()
                    | ~F.coalesce(F.col("op").isin(*self._VALID_OPS),
@@ -202,7 +214,7 @@ class CdcPipeline:
                       .otherwise(F.concat(F.lit("bad_op:"),
                                           F.coalesce(F.col("op"),
                                                      F.lit("null")))))
-            poison = (sub.filter(bad)
+            poison = (data.filter(bad)
                       .withColumn("_reason", reason)
                       .withColumn("_batch_id", F.lit(batch_id).cast("long")))
             n_bad = poison.count() if self.eager_stats else -1
@@ -213,8 +225,8 @@ class CdcPipeline:
                                          "quarantine")
             if n_bad > 0:
                 stats.quarantined += n_bad
-            sub = sub.filter(~bad)
-        changes = self._normalize_changes(sub)
+            data = data.filter(~bad)
+        changes = self._normalize_changes(data, ddl_lsns, schemas)
         if self.dedup_deliveries:
             changes = changes.dropDuplicates(["repo", "path", "lsn"])
         if self.provenance:

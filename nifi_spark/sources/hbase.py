@@ -154,12 +154,15 @@ class GetHBaseSource(Spool):
         if last_ts is not None and latest == last_ts:
             for rk, vals in seen.items():
                 matching.setdefault(rk, set()).update(vals)
+        # land first, then advance the state: a crash in between re-pulls
+        # the rows (at-least-once) instead of losing them
+        n = self._land(out_rows, table.name)
         self.state.put(self.key, {
             "timestamp": latest,
             "matching_cells": {k: sorted(v) for k, v in
                                sorted(matching.items())},
             "table": table.name})
-        return self._land(out_rows, table.name)
+        return n
 
     def _land(self, rows: "list[tuple[str, str]]",
               table_name: str) -> int:

@@ -24,10 +24,12 @@ seam with the same semantics an Iceberg `MERGE INTO` would give:
   ledger-write is idempotent (exactly-once end state; upgrades NiFi's
   at-least-once commit-then-state edge, QueryDatabaseTable.java:313-321).
 
-The merge itself is a single hash aggregation, not a join: current rows of
-dirty buckets are unioned with the compacted change set and reduced with
-`max_by(row, lsn)` per key. Partial (map-side) aggregation makes this
-naturally skew-tolerant — a hot repo's rows combine before the shuffle.
+The merge has two plans over one writer: copy-on-write ('argmax') finds
+each key's winning LSN with a narrow hash-agg over current∪changes and
+joins the winning rows back; merge-on-read ('delta') appends the batch's
+per-key winners as delta files that `read()` folds. Both write through
+`_write_version`: one file per bucket under `versions/vNNNNNN`, then one
+manifest commit.
 """
 
 from __future__ import annotations
@@ -38,6 +40,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from nifi_spark.operators import latest_wins
 from nifi_spark.spool import publish_json
 
 _BASE = [("repo", "string"), ("path", "string"), ("commit", "string"),
@@ -217,15 +220,11 @@ class SnapshotTableStore:
             # ties (crash-replayed delta == compacted base, identical
             # payload by contract) resolve to the delta copy via _src,
             # mirroring the COW merge's (lsn, _src) rule.
-            row = F.struct(*[F.col(c) for c in names], F.col("op"))
-            folded = (fold_in.groupBy(*KEY)
-                      .agg(F.max_by(row, F.struct("_last_lsn", "_src"))
-                            .alias("w"),
-                           F.max(F.col("_last_lsn")).alias("_last_lsn"))
-                      .filter(F.col("w.op") != "delete")
-                      .select(*[F.col(f"w.{c}").alias(c) for c in names],
-                              "_last_lsn"))
-            parts.append(folded)
+            folded = latest_wins(
+                fold_in.withColumn("_ord", F.struct("_last_lsn", "_src"))
+                       .drop("_src"), KEY, "_ord")
+            parts.append(folded.filter(F.col("op") != "delete")
+                         .select(*names, "_last_lsn"))
         if not parts:
             fields = ", ".join(f"`{n}` {t}" for n, t in cur) + ", `_last_lsn` long"
             empty = spark.createDataFrame([], schema=fields)
@@ -305,47 +304,69 @@ class SnapshotTableStore:
         m = self._load_manifest()
         full = self.read(spark, with_lsn=True) \
             .withColumn("bucket", bucket_expr(new_n_buckets))
-        new_version = m["version"] + 1
-        rel = os.path.join("versions", f"v{new_version:06d}")
+        m["buckets"] = {}
+        m["n_buckets"] = new_n_buckets
+        version, written = self._write_version(
+            m, full, list(range(new_n_buckets)))
+        return {"n_buckets": new_n_buckets, "buckets_written": len(written),
+                "version": version}
+
+    # ---------------- the one writer ----------------
+    def _write_version(self, m: dict, rows: DataFrame, buckets: list[int],
+                       delta: bool = False) -> tuple[int, set[int]]:
+        """Write ``rows`` (with a ``bucket`` column) as one file per bucket
+        under ``versions/vNNNNNN`` and commit manifest ``m`` as that new
+        version. Each of ``buckets`` that got a file now points at it — as
+        its base file, or appended to its deltas when ``delta``; a bucket
+        that got no base file has no rows left and leaves the map.
+        Returns (version, buckets written)."""
+        version = m["version"] + 1
+        rel = os.path.join("versions", f"v{version:06d}")
         out_dir = os.path.join(self.root, rel)
-        (full.repartition(new_n_buckets, "bucket")
+        # one output task per bucket → exactly one file per bucket dir
+        # (small-file control; MergeContent bin-packing analog).
+        (rows.repartition(len(buckets), "bucket")
              .write.partitionBy("bucket").mode("overwrite").parquet(out_dir))
         written = {int(d.split("=")[1]) for d in os.listdir(out_dir)
                    if d.startswith("bucket=")}
         sid = m["current_schema_id"]
-        m["buckets"] = {str(b): {"path": os.path.join(rel, f"bucket={b}"),
-                                 "schema_id": sid}
-                        for b in sorted(written)}
-        m["n_buckets"] = new_n_buckets
-        m["version"] = new_version
+        for b in buckets:
+            entry = {"path": os.path.join(rel, f"bucket={b}"),
+                     "schema_id": sid}
+            if delta:
+                if b in written:
+                    m["buckets"].setdefault(
+                        str(b), {"path": None, "schema_id": sid}
+                    ).setdefault("deltas", []).append(entry)
+            elif b in written:
+                m["buckets"][str(b)] = entry
+            else:
+                m["buckets"].pop(str(b), None)  # bucket fully deleted
+        m["version"] = version
         m["committed_at"] = time.time()
         self._commit(m)
-        return {"n_buckets": new_n_buckets, "buckets_written": len(written),
-                "version": new_version}
+        return version, written
 
     # ---------------- merge (the PutSQL / MERGE INTO analog) ----------------
     def merge(self, spark: SparkSession, changes: DataFrame,
               strategy: str = "argmax",
-              assume_all_dirty: bool = False,
-              dedup_ties: bool = False) -> dict:
+              assume_all_dirty: bool = False) -> dict:
         """Apply a change set (store-schema columns + `op` ∈
         {'upsert','delete'} + `lsn`; multiple rows per key allowed — LWW
         by LSN happens here, exactly once).
 
         strategy:
-        * 'argmax' (default) — shuffle-narrow plan: aggregate only
-          (repo, path, lsn, op) to find each key's winning LSN, then
-          join the winner list back against current∪changes to fetch the
-          winning full rows. Full-width rows (content ~KBs) NEVER enter
-          a wide shuffle — measured ~2× the max_by plan at 8M
-          events/batch and scales with cores because the only wide
-          movement left is the final per-bucket write. AQE picks the
-          join physical form at runtime: broadcast-hash while the
+        * 'argmax' (default, copy-on-write) — shuffle-narrow plan:
+          aggregate only (repo, path, lsn, op) to find each key's winning
+          LSN, then join the winner list back against current∪changes to
+          fetch the winning full rows. Full-width rows (content ~KBs)
+          NEVER enter a wide shuffle — measured ~2× a full-row max_by
+          agg at 8M events/batch and scales with cores because the only
+          wide movement left is the final per-bucket write. AQE picks
+          the join physical form at runtime: broadcast-hash while the
           touched-key set fits an executor, shuffle join past that
           (10^9+ touched keys) — same semantics either way, no driver
           count job needed.
-        * 'maxby' — single wide hash-agg `max_by(full_row, lsn)`;
-          simplest plan, shuffles full-width partial aggregates.
         * 'delta' — merge-on-read: the batch (within-batch LWW
           compacted, delete tombstones KEPT) appends as per-bucket
           delta files; no base bucket is read or rewritten, so
@@ -364,10 +385,9 @@ class SnapshotTableStore:
         key and the full-width rows take exactly one exchange (the
         per-bucket repartition before write). Changes must be
         (key, lsn)-unique — automatic for any real changelog, where the
-        LSN is a log position; for at-least-once feeds that can
-        re-deliver inside one batch, pass dedup_ties=True (adds a
-        dropDuplicates — one extra wide exchange) or run
-        operators.detect_duplicate upstream.
+        LSN is a log position; at-least-once feeds that can re-deliver
+        inside one batch go through `CdcPipeline.dedup_deliveries`,
+        which drops the repeats from the slice before the merge.
 
         assume_all_dirty ("bulk mode"): skip the dirty-bucket probe job
         and treat every bucket as dirty. Correct always (clean buckets
@@ -377,16 +397,16 @@ class SnapshotTableStore:
 
         Returns stats {dirty_buckets, rows_written, version}.
         """
+        if strategy not in ("argmax", "delta"):
+            raise ValueError(f"unknown merge strategy {strategy!r}")
         m = self._load_manifest()
-        cur = self.schema_columns(m)
-        names = [n for n, _ in cur]
+        names = [n for n, _ in self.schema_columns(m)]
         nb = m["n_buckets"]
 
         # No cache: the dirty-bucket probe is a column-pruned scan of just
         # (repo, path) — cheaper than materializing full-width change rows,
         # and the only viable shape when the change slice exceeds memory.
-        chg = (changes.withColumn("bucket", bucket_expr(nb))
-               .withColumn("_src", F.lit(1)))
+        chg = changes.withColumn("bucket", bucket_expr(nb))
         if assume_all_dirty:
             dirty = list(range(nb))
         else:
@@ -396,16 +416,18 @@ class SnapshotTableStore:
             return {"dirty_buckets": [], "rows_written": 0, "version": m["version"]}
 
         if strategy == "delta":
-            return self._merge_delta(spark, chg, dirty, m)
-
-        current = (self.read(spark, buckets=dirty, with_lsn=True)
-                   .withColumn("op", F.lit("upsert"))
-                   .withColumnRenamed("_last_lsn", "lsn")
-                   .withColumn("bucket", bucket_expr(nb))
-                   .withColumn("_src", F.lit(0)))
-        unioned = current.unionByName(chg.select(*current.columns))
-
-        if strategy == "argmax":
+            # within-batch LWW; delete tombstones stay (read() needs them)
+            winner = (latest_wins(chg.select(*names, "op", "bucket", "lsn"),
+                                  KEY, "lsn")
+                      .withColumnRenamed("lsn", "_last_lsn"))
+        else:
+            current = (self.read(spark, buckets=dirty, with_lsn=True)
+                       .withColumn("op", F.lit("upsert"))
+                       .withColumnRenamed("_last_lsn", "lsn")
+                       .withColumn("bucket", bucket_expr(nb))
+                       .withColumn("_src", F.lit(0)))
+            unioned = current.unionByName(
+                chg.withColumn("_src", F.lit(1)).select(*current.columns))
             # (lsn, _src) is unique per key: the store holds one row per
             # key (_src=0) and changes are (key,lsn)-unique (_src=1), so
             # a replay tie (change lsn == stored lsn) resolves to the
@@ -425,85 +447,9 @@ class SnapshotTableStore:
             winner = (unioned.join(winners, [*KEY, "lsn", "_src"])
                       .withColumnRenamed("lsn", "_last_lsn")
                       .drop("op", "_src"))
-            if dedup_ties:
-                winner = winner.dropDuplicates(KEY)
-        elif strategy == "maxby":
-            # LWW reduce: one hash-agg (partial map-side combine ⇒
-            # skew-safe), cheaper than the sort a window would force.
-            winners = None
-            row = F.struct(*[F.col(c) for c in names], F.col("op"), F.col("bucket"))
-            winner = (unioned.groupBy(*KEY)
-                      .agg(F.max_by(row, F.col("lsn")).alias("w"),
-                           F.max("lsn").alias("_last_lsn"))
-                      .select(*[F.col(f"w.{c}").alias(c) for c in names],
-                              F.col("w.op").alias("op"),
-                              F.col("w.bucket").alias("bucket"),
-                              "_last_lsn")
-                      .filter(F.col("op") != "delete")
-                      .drop("op"))
-        else:
-            raise ValueError(f"unknown merge strategy {strategy!r}")
-
-        new_version = m["version"] + 1
-        rel = os.path.join("versions", f"v{new_version:06d}")
-        out_dir = os.path.join(self.root, rel)
-        # one output task per dirty bucket → exactly one file per bucket dir
-        # (small-file control; MergeContent bin-packing analog).
-        (winner.repartition(len(dirty), "bucket")
-               .write.partitionBy("bucket").mode("overwrite").parquet(out_dir))
-
-        written = {int(d.split("=")[1]) for d in os.listdir(out_dir)
-                   if d.startswith("bucket=")}
-        sid = m["current_schema_id"]
-        for b in dirty:
-            if b in written:
-                m["buckets"][str(b)] = {"path": os.path.join(rel, f"bucket={b}"),
-                                        "schema_id": sid}
-            else:
-                m["buckets"].pop(str(b), None)  # bucket fully deleted
-        m["version"] = new_version
-        m["committed_at"] = time.time()
-        self._commit(m)
-        return {"dirty_buckets": dirty, "rows_written": -1, "version": new_version}
-
-    def _merge_delta(self, spark: SparkSession, chg: DataFrame,
-                     dirty: list[int], m: dict) -> dict:
-        """Merge-on-read append: within-batch LWW compaction (one
-        batch-sized hash-agg — multiple ops per key in the batch reduce
-        to the latest; delete tombstones survive as rows, read-time LWW
-        needs them), then one delta file per dirty bucket. The base
-        table is neither read nor rewritten."""
-        cur = self.schema_columns(m)
-        names = [n for n, _ in cur]
-        row = F.struct(*[F.col(c) for c in names], F.col("op"),
-                       F.col("bucket"))
-        compacted = (chg.groupBy(*KEY)
-                     .agg(F.max_by(row, F.col("lsn")).alias("w"),
-                          F.max("lsn").alias("_last_lsn"))
-                     .select(*[F.col(f"w.{c}").alias(c) for c in names],
-                             F.col("w.op").alias("op"),
-                             F.col("w.bucket").alias("bucket"),
-                             "_last_lsn"))
-        new_version = m["version"] + 1
-        rel = os.path.join("versions", f"v{new_version:06d}")
-        out_dir = os.path.join(self.root, rel)
-        (compacted.repartition(len(dirty), "bucket")
-                  .write.partitionBy("bucket").mode("overwrite")
-                  .parquet(out_dir))
-        written = {int(d.split("=")[1]) for d in os.listdir(out_dir)
-                   if d.startswith("bucket=")}
-        sid = m["current_schema_id"]
-        for b in sorted(written):
-            e = m["buckets"].setdefault(str(b),
-                                        {"path": None, "schema_id": sid})
-            e.setdefault("deltas", []).append(
-                {"path": os.path.join(rel, f"bucket={b}"),
-                 "schema_id": sid})
-        m["version"] = new_version
-        m["committed_at"] = time.time()
-        self._commit(m)
-        return {"dirty_buckets": dirty, "rows_written": -1,
-                "version": new_version, "mode": "delta"}
+        version, _ = self._write_version(m, winner, dirty,
+                                         delta=strategy == "delta")
+        return {"dirty_buckets": dirty, "rows_written": -1, "version": version}
 
     def compact(self, spark: SparkSession,
                 buckets: list[int] | None = None) -> dict:
@@ -523,26 +469,8 @@ class SnapshotTableStore:
             return {"compacted_buckets": [], "version": m["version"]}
         folded = (self.read(spark, buckets=target, with_lsn=True)
                   .withColumn("bucket", bucket_expr(nb)))
-        new_version = m["version"] + 1
-        rel = os.path.join("versions", f"v{new_version:06d}")
-        out_dir = os.path.join(self.root, rel)
-        (folded.repartition(len(target), "bucket")
-               .write.partitionBy("bucket").mode("overwrite")
-               .parquet(out_dir))
-        written = {int(d.split("=")[1]) for d in os.listdir(out_dir)
-                   if d.startswith("bucket=")}
-        sid = m["current_schema_id"]
-        for b in target:
-            if b in written:
-                m["buckets"][str(b)] = {
-                    "path": os.path.join(rel, f"bucket={b}"),
-                    "schema_id": sid}
-            else:  # every row in the bucket was tombstoned away
-                m["buckets"].pop(str(b), None)
-        m["version"] = new_version
-        m["committed_at"] = time.time()
-        self._commit(m)
-        return {"compacted_buckets": target, "version": new_version}
+        version, _ = self._write_version(m, folded, target)
+        return {"compacted_buckets": target, "version": version}
 
 
 class IcebergTableAdapter:

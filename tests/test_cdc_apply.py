@@ -5,9 +5,9 @@ Mirrors the reference's stateful-incremental tests
 nifi-standard-processors/src/test/java/org/apache/nifi/processors/standard/
 QueryDatabaseTableTest.java:167-250): replay deltas, assert final state.
 
-These bulk tests run with coalesce_ddl=True (one merge per batch); the
-faithful DDL-split path has its own dedicated tests in
-test_schema_evolution.py.
+Every batch here is one merge, DDL or not; the mid-batch DDL epoch
+projection has its own dedicated tests in test_schema_evolution.py, and
+tests/test_cdc_differential.py compares the merge plans on generated logs.
 """
 
 from __future__ import annotations
@@ -42,7 +42,6 @@ def make_pipeline(spark, root, changelog_path, **kw):
     store.init()
     ledger = OffsetLedger(str(root / "ckpt"))
     prov = ProvenanceWriter(str(root / "prov"))
-    kw.setdefault("coalesce_ddl", True)
     return CdcPipeline(spark=spark, changelog_path=changelog_path,
                        store=store, ledger=ledger, provenance=prov, **kw)
 
@@ -100,7 +99,7 @@ def test_seeded_initial_table(spark, tmp_path, changelog, changelog_path):
     store.merge(spark, seed)
     ledger = OffsetLedger(str(tmp_path / "ckpt2"))
     pipe = CdcPipeline(spark=spark, changelog_path=changelog_path, store=store,
-                       ledger=ledger, coalesce_ddl=True)
+                       ledger=ledger)
     pipe.apply_until(int(changelog["lsn"].max()))
     expected, _ = oracle.replay(changelog, initial=base)
     got = pipe.final_table().toPandas()
@@ -120,31 +119,13 @@ def test_fixture_determinism():
     assert dups >= 2
 
 
-def test_bulk_mode_and_maxby_match_oracle(spark, tmp_path, changelog,
-                                          changelog_path):
-    """bulk_mode (probe skipped, all buckets rewritten) and the 'maxby'
-    merge strategy produce the same final state as the default plan."""
+def test_bulk_mode_matches_oracle(spark, tmp_path, changelog,
+                                 changelog_path):
+    """bulk_mode (probe skipped, all buckets rewritten) produces the same
+    final state as the default plan."""
     pipe = make_pipeline(spark, tmp_path, changelog_path, bulk_mode=True)
     bounds = fixtures.batch_bounds(changelog, 3)
     pipe.run(bounds)
     expected, _ = oracle.replay(changelog)
     got = pipe.final_table().toPandas()
     oracle.assert_equivalent(got[expected.columns.tolist()], expected)
-
-    store2 = SnapshotTableStore(str(tmp_path / "t2"), n_buckets=8)
-    store2.init()
-    log = spark.read.parquet(changelog_path)
-    data = log.filter(log.op != "schema_change")
-    from pyspark.sql import functions as F
-    changes = data.select(
-        "repo", "path", "commit", "lang", "content",
-        F.when(F.col("op") == "delete", "delete").otherwise("upsert").alias("op"),
-        "lsn")
-    store2.merge(spark, changes, strategy="maxby")
-    got2 = store2.read(spark).toPandas()
-    base = expected[["repo", "path", "commit", "content"]]
-    got2b = got2[["repo", "path", "commit", "content"]]
-    # maxby ran before any schema evolution: compare base columns only
-    a = got2b.sort_values(["repo", "path"]).reset_index(drop=True)
-    b = base.sort_values(["repo", "path"]).reset_index(drop=True)
-    assert a.equals(b)

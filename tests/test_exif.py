@@ -353,6 +353,37 @@ def test_id3v2_text_frames():
     assert md["title"] == "Old Title" and md["track"] == "7"
 
 
+def test_id3v2_unsynchronised_tag_parses_header_only():
+    """Flag 0x80 (unsynchronisation) stuffs 0x00 after every 0xFF, which
+    shifts frame sizes: the frames are skipped and only the version pair
+    is reported, never garbage text."""
+    from nifi_spark.datalib.exif import parse_mp3_metadata
+    # title "\xffSong": the frame size counts 6 data bytes, but on disk
+    # a stuffed 0x00 follows the 0xFF, so a plain read gets "\xff" + NUL
+    frame = (b"TIT2" + (6).to_bytes(4, "big") + b"\x00\x00"
+             + b"\x00\xff\x00Song")
+    md = dict(parse_mp3_metadata(_id3v2(3, frame, flags=0x80)))
+    assert md["MP3.ID3v2"] == "2.3.0"
+    assert not [k for k in md if k.startswith("MP3.ID3v2.")]
+    assert "title" not in md
+    # the same flag on a tag whose frames would parse cleanly
+    plain = b"TIT2" + (5).to_bytes(4, "big") + b"\x00\x00" + b"\x00Song"
+    md = dict(parse_mp3_metadata(_id3v2(4, plain, flags=0x80)))
+    assert "title" not in md and md["MP3.ID3v2"] == "2.4.0"
+
+
+def test_id3v22_compressed_tag_parses_header_only():
+    """On v2.2, flag 0x40 marks the whole tag compressed: its bytes are
+    not frames, so only the version pair is reported."""
+    from nifi_spark.datalib.exif import parse_mp3_metadata
+    frames = b"TT2" + (6).to_bytes(3, "big") + b"\x00Title"
+    md = dict(parse_mp3_metadata(_id3v2(2, frames, flags=0x40)))
+    assert md["MP3.ID3v2"] == "2.2.0"
+    assert "title" not in md and "MP3.ID3v2.TT2" not in md
+    # unflagged, the same bytes are a readable v2.2 tag
+    assert dict(parse_mp3_metadata(_id3v2(2, frames)))["title"] == "Title"
+
+
 def test_id3v1_wins_over_id3v2_on_conflict():
     """Tika fallback order: when both tags exist, the v1 values (parsed
     last) win in the flattened dict — the reference's test fixture

@@ -91,6 +91,29 @@ def test_initial_time_range_current(tmp_path):
     assert src.drain(t, now_ms=400) == 1   # only ts>=400
 
 
+def test_failed_land_keeps_state_and_repulls(tmp_path, monkeypatch):
+    """A drain whose landing fails must not advance the state: the next
+    drain pulls the same rows again (at-least-once, never lost)."""
+    t = HBaseTable("t1")
+    for i in range(3):
+        t.put(f"r{i}", "f", "q", f"v{i}", 100 + i)
+    src = _src(tmp_path)
+    assert src.drain(t) == 3
+    t.put("r3", "f", "q", "v3", 200)
+    state = src.state.get(src.key)
+
+    def crash(*_a):
+        raise OSError("disk gone")
+
+    monkeypatch.setattr(src, "_land", crash)
+    with pytest.raises(OSError):
+        src.drain(t)
+    assert src.state.get(src.key) == state
+    monkeypatch.undo()
+    assert src.drain(t) == 1
+    assert src.drain(t) == 0
+
+
 def test_read_back_spool(spark, tmp_path):
     t = HBaseTable("t1")
     for i in range(6):

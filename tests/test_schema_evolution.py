@@ -1,9 +1,10 @@
-"""Schema evolution: DDL-split batches, add/rename, drift policies.
+"""Schema evolution: mid-batch DDL, add/rename, drift policies.
 
 NiFi analog: ConvertJSONToSQL's unmatched-field/column policies
-(standard/ConvertJSONToSQL.java:101-113,156-166). The faithful mid-batch
-DDL split (apply data sub-batch → ALTER → continue) is exercised here with
-a hand-crafted changelog.
+(standard/ConvertJSONToSQL.java:101-113,156-166). A batch with mid-batch
+DDL applies every ALTER first and then merges once, reading each row under
+the schema of its own epoch; hand-crafted changelogs pin that this equals
+applying the batch serially (data → ALTER → data).
 """
 
 from __future__ import annotations
@@ -55,7 +56,7 @@ def test_mid_batch_ddl_split_faithful(spark, tmp_path, crafted):
     store.init()
     pipe = CdcPipeline(spark=spark, changelog_path=path, store=store,
                        ledger=OffsetLedger(str(tmp_path / "c")),
-                       coalesce_ddl=False, checksum=False)
+                       checksum=False)
     stats = pipe.apply_until(8)
     assert stats.schema_events == 3
     assert stats.sub_batches == 4  # 3 DDL boundaries → 4 data sub-batches
@@ -72,17 +73,64 @@ def test_mid_batch_ddl_split_faithful(spark, tmp_path, crafted):
     assert got.set_index("path").loc["a.py", "commit"] == "c4"
 
 
-def test_coalesced_ddl_same_final_state(spark, tmp_path, crafted):
-    cl, path = crafted
+def test_mid_batch_ddl_is_one_merge(spark, tmp_path, crafted):
+    """3 DDL events in one batch: 3 metadata commits and ONE merge."""
+    _cl, path = crafted
     store = SnapshotTableStore(str(tmp_path / "t2"), n_buckets=2)
     store.init()
+    calls = {"merge": 0, "evolve": 0}
+
+    def counted(name, fn):
+        def wrapper(*a, **kw):
+            calls[name] += 1
+            return fn(*a, **kw)
+        return wrapper
+
+    store.merge = counted("merge", store.merge)
+    store.evolve = counted("evolve", store.evolve)
     pipe = CdcPipeline(spark=spark, changelog_path=path, store=store,
                        ledger=OffsetLedger(str(tmp_path / "c2")),
-                       coalesce_ddl=True, checksum=False)
-    pipe.apply_until(8)
-    expected, _ = oracle.replay(cl)
-    got = pipe.final_table().toPandas()
-    oracle.assert_equivalent(got[expected.columns.tolist()], expected)
+                       checksum=False)
+    assert pipe.apply_until(8).sub_batches == 4
+    assert calls == {"merge": 1, "evolve": 3}
+
+
+def test_evolved_column_values_follow_their_epoch(spark, tmp_path):
+    """A feed that carries values for an evolved column: each row is read
+    under the column names of its own schema epoch. Applying all DDL up
+    front and projecting by the final schema would lose A's value, which
+    the feed spells `stars` before the rename."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    rows = [
+        _row(0, "insert", "o/r1", "a.py", "c0", "python", "v0 of a"),
+        _row(1, "insert", "o/r1", "b.py", "c1", "python", "v0 of b"),
+        _row(2, "schema_change", sc=("add_column", "stars", None, "string")),
+        dict(_row(3, "update", "o/r1", "a.py", "c2", "python", "v1 of a"),
+             stars="5"),
+        _row(4, "schema_change",
+             sc=("rename_column", "stars", "stargazers", "string")),
+        dict(_row(5, "update", "o/r1", "b.py", "c3", "python", "v1 of b"),
+             stargazers="7"),
+    ]
+    cl = pd.DataFrame(rows, columns=fixtures.CHANGELOG_COLUMNS
+                      + ["stars", "stargazers"])
+    p = str(tmp_path / "valued.parquet")
+    schema = pa.schema([(c, pa.int64() if c == "lsn" else
+                         pa.timestamp("us") if c == "ts" else pa.string())
+                        for c in cl.columns])
+    pq.write_table(pa.Table.from_pandas(cl, schema=schema,
+                                        preserve_index=False), p)
+    store = SnapshotTableStore(str(tmp_path / "t5"), n_buckets=2)
+    store.init()
+    pipe = CdcPipeline(spark=spark, changelog_path=p, store=store,
+                       ledger=OffsetLedger(str(tmp_path / "c5")),
+                       checksum=False)
+    pipe.apply_until(5)
+    got = pipe.final_table().toPandas().set_index("path")
+    assert got.loc["a.py", "stargazers"] == "5"
+    assert got.loc["b.py", "stargazers"] == "7"
+    assert list(got.loc["a.py", ["commit", "content"]]) == ["c2", "v1 of a"]
 
 
 def test_evolution_is_metadata_only(spark, tmp_path, crafted):
@@ -92,7 +140,7 @@ def test_evolution_is_metadata_only(spark, tmp_path, crafted):
     store.init()
     pipe = CdcPipeline(spark=spark, changelog_path=path, store=store,
                        ledger=OffsetLedger(str(tmp_path / "c3")),
-                       coalesce_ddl=False, checksum=False)
+                       checksum=False)
     pipe.apply_until(3)  # insert, insert, add_column, update
     v = store.current_version()
     store.evolve("add_column", "homepage", None, "string")

@@ -430,3 +430,28 @@ def test_tail_property_no_loss_no_dup(tmp_path_factory, ops):
     expected = b"".join(rotated) + cur[:_complete_prefix(cur)]
     got = "".join(r["content"] for r in _chunks(src)).encode()
     assert got == expected, (ops, got, expected)
+
+
+def test_gate_rollover_row_matches_oracle_off_tens(spark, tmp_path):
+    """The gate row and its DuckDB oracle agree when the events table's
+    row count is not a multiple of 10: the five phases then cover fewer
+    than all rows, and the oracle must not fold the leftovers into the
+    last chunk."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as E
+    ids = pa.array(range(7, 7 + 3 * 997, 3), pa.int64())
+    pq.write_table(pa.table({"event_id": ids}),
+                   str(tmp_path / "events.parquet"))
+    got = (E.queries()["tail_file_rollover"](spark, str(tmp_path))
+           .toPandas().sort_values("batch_id"))
+    con = duckdb.connect()
+    con.sql(f"create view events as select * from "
+            f"'{tmp_path / 'events.parquet'}'")
+    want = (con.sql(E.oracle_sql()["tail_file_rollover"]).df()
+            .sort_values("batch_id"))
+    assert list(got.columns) == list(want.columns)
+    assert (got.astype(str).values.tolist()
+            == want.astype(str).values.tolist())
